@@ -100,10 +100,14 @@ object Bench {
     // (quiet box ≈ the JVM's own cores; skewed run ≫).
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
+    // the N of local[N]: the parallelism the run had, which can be far
+    // below the box's core count
+    val localN =
+      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
     val cond =
       s""""run_conditions":{"load_avg_end":${fmt(math.max(loadAvg, 0.0))},""" +
         s""""load_avg_start":${fmt(math.max(startLoadAvg, 0.0))},""" +
-        s""""cpus":${Runtime.getRuntime.availableProcessors()}}"""
+        s""""cpus":$localN}"""
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",$cond}"""
     // The driver's bounded stdout-tail capture has truncated the long

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -60,9 +58,7 @@ object Tables {
           .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
           .toSeq
       dataFiles.map { p =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-        try p.toString -> reader.getFooter.getFileMetaData.getSchema
-        finally reader.close()
+        p.toString -> ParquetFooters.read(p, conf).getFileMetaData.getSchema
       }
     })
 

@@ -614,11 +614,11 @@ object Embeddings {
     val mP = pqLitModel(s, d)
     val qdtabP = q.select(
       col("query_id"),
-      pqDtabArr(mP, col("qv")).as("dtab"))
+      pqDtabArr(mP, col("qv"), QueryVector).as("dtab"))
     val ipAdc = assignedK
       .join(broadcast(qprobeK.select(col("query_id"), col("cell"))), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("codes", pqEncode(mP, col("embedding")))
+      .withColumn("codes", pqEncode(mP, col("embedding"), StoredEmbedding))
       .join(broadcast(qdtabP), Seq("query_id"))
       .select(
         col("query_id"),
@@ -1433,6 +1433,10 @@ object Embeddings {
       js: Array[Array[Int]], // [sub] -> present entry ids, ascending
       cq: Array[Array[Array[Long]]]) // [sub][slot][dsub] -> centroid
 
+  // what a PQ expression's input vector is, for its dimension error
+  private final val QueryVector = "query vector"
+  private final val StoredEmbedding = "stored embedding"
+
   /** Quantized components of an embedding array — the same expression
     * the former long-form `comps` frame computed per exploded row.
     */
@@ -1448,14 +1452,14 @@ object Embeddings {
     * task burned 53 s of CPU). As the HOF input it evaluates exactly
     * once per row — dim BigDecimal roundings, then pure long math.
     */
-  private def xqSubs(v: Column): Column = {
+  private def xqSubs(v: Column, input: String): Column = {
     // native since round 17 (graft.plans.PqQuantSubsExpr): the HOF
     // transform×transform ran 64 interpreted BigDecimal roundings per
     // row through boxed lambdas; the expression runs the identical
     // Spark-Round-exact arithmetic as a primitive loop.
     import org.apache.spark.sql.graft.Exprs
     Exprs.column(graft.plans.PqQuantSubsExpr(
-      Exprs.expression(v), kmQ.toDouble, pqM, pqDsub))
+      Exprs.expression(v), kmQ.toDouble, pqM, pqDsub, input))
   }
 
   /** Integer L2² from a subvector to one centroid array — exact in a
@@ -1480,10 +1484,10 @@ object Embeddings {
     * the dominant cost of every PQ scoring pass and, under full-run
     * GC pressure, a 3x swing on q_ann_sql_pq.
     */
-  private def pqEncode(m: PqLitModel, v: Column): Column = {
+  private def pqEncode(m: PqLitModel, v: Column, input: String): Column = {
     import org.apache.spark.sql.graft.Exprs
     Exprs.column(graft.plans.PqEncodeExpr(
-      Exprs.expression(v), m.cq, m.js, kmQ.toDouble, pqDsub))
+      Exprs.expression(v), m.cq, m.js, kmQ.toDouble, pqDsub, input))
   }
 
   /** Per-query ADC table as a flat array projection: index sub·k + j
@@ -1491,7 +1495,7 @@ object Embeddings {
     * Absent entries score against a zero-filled centroid and are
     * unreachable — codes only ever index PRESENT entries.
     */
-  private def pqDtabArr(m: PqLitModel, v: Column): Column = {
+  private def pqDtabArr(m: PqLitModel, v: Column, input: String): Column = {
     import org.apache.spark.sql.graft.Exprs
     val slots: Array[Map[Int, Int]] = m.js.map(_.zipWithIndex.toMap)
     // dense [sub][j][dsub] table, absent entries zero-filled; native
@@ -1505,7 +1509,7 @@ object Embeddings {
             .map(sl => m.cq(s)(sl))
             .getOrElse(Array.fill(pqDsub)(0L))))
     Exprs.column(graft.plans.PqDtabExpr(
-      Exprs.expression(v), cqFull, kmQ.toDouble, pqDsub))
+      Exprs.expression(v), cqFull, kmQ.toDouble, pqDsub, input))
   }
 
   /** ADC distance: M table lookups against the broadcast `dtab` array —
@@ -1581,8 +1585,8 @@ object Embeddings {
       .select(
         posexplode(
           zip_with(
-            xqSubs(col("embedding")),
-            pqEncode(m0, col("embedding")),
+            xqSubs(col("embedding"), StoredEmbedding),
+            pqEncode(m0, col("embedding"), StoredEmbedding),
             (xsub, cell) => struct(xsub.as("xsub"), cell.as("cell"))))
           .as(Seq("sub", "sc")))
       .select(
@@ -1611,12 +1615,12 @@ object Embeddings {
     val enc = checked(s, d)
       .select(
         col("vec_id").as("neighbor_id"),
-        pqEncode(m, col("embedding")).as("codes"))
+        pqEncode(m, col("embedding"), StoredEmbedding).as("codes"))
     // per-query ADC tables ride the O(1) broadcast query frame
     val q = querySample(checked(s, d))
       .select(
         col("vec_id").as("query_id"),
-        pqDtabArr(m, col("embedding")).as("dtab"))
+        pqDtabArr(m, col("embedding"), StoredEmbedding).as("dtab"))
     // ADC scoring: each candidate costs M table lookups, fully inside
     // whole-stage codegen; the only shuffle is the per-query top-k
     val wTop = Window
@@ -1749,7 +1753,7 @@ object Embeddings {
     // per-query ADC tables ride the O(1) broadcast query frame
     val qdtab = q.select(
       col("query_id"),
-      pqDtabArr(m, col("qv")).as("dtab"))
+      pqDtabArr(m, col("qv"), QueryVector).as("dtab"))
     val qprobe = ivfProbe(e, ck2, ivfpqProbeP).select(col("query_id"), col("cell"))
     // IVF pruning: candidates = members of the probed cells. Each
     // vector lives in exactly one cell and probed cells are distinct,
@@ -1762,7 +1766,7 @@ object Embeddings {
       .withColumn(
         "n_candidates",
         count(lit(1)).over(Window.partitionBy(col("query_id"))))
-      .withColumn("codes", pqEncode(m, col("embedding")))
+      .withColumn("codes", pqEncode(m, col("embedding"), StoredEmbedding))
       .join(broadcast(qdtab), Seq("query_id"))
       .select(
         col("query_id"),
@@ -1961,7 +1965,7 @@ object Embeddings {
         col("query_id"),
         col("vec_id").as("neighbor_id"),
         col("n_candidates"),
-        xqSubs(col("embedding")).as("xsubs"))
+        xqSubs(col("embedding"), StoredEmbedding).as("xsubs"))
       .localCheckpoint()
     // ENCODE as a join: per (candidate, sub) argmin over the codebook
     // FRAME — min distance, ties to the smallest entry id, exactly
@@ -1979,7 +1983,7 @@ object Embeddings {
       .agg(min_by(col("j"), struct(col("d2"), col("j"))).as("cj"))
     // per-query ADC tables as a join (O(queries × M × k) rows)
     val dtab = q
-      .select(col("query_id"), xqSubs(col("qv")).as("xsubs"))
+      .select(col("query_id"), xqSubs(col("qv"), QueryVector).as("xsubs"))
       .localCheckpoint()
       .select(col("query_id").as("dq"), posexplode(col("xsubs")).as(Seq("dsub0", "xsub")))
       .join(broadcast(cb.select(
@@ -2380,7 +2384,7 @@ object Embeddings {
     val enc = pruned
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("embedding"), col("nrm"),
-        pqEncode(m, col("embedding")).as("codes"))
+        pqEncode(m, col("embedding"), StoredEmbedding).as("codes"))
       .localCheckpoint()
     ServedPqIndex(m, enc)
   }
@@ -2405,7 +2409,7 @@ object Embeddings {
     val qs = probe.select(col("query_id"), col("qv"), col("qnrm")).distinct()
     // per-query ADC tables ride the O(panel) broadcast frame
     val qTab = qs.select(col("query_id"),
-      pqDtabArr(m, col("qv")).as("dtab"))
+      pqDtabArr(m, col("qv"), QueryVector).as("dtab"))
     val adc = enc
       .join(broadcast(probe.select(col("query_id"), col("cell"))), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))

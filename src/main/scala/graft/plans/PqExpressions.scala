@@ -33,19 +33,19 @@ import org.apache.spark.sql.types._
   * embedding path.
   */
 object PqOps {
-  /** `ann_search`'s query panel is USER data: a wrong-dimension vector
-    * must raise a descriptive error, not an
+  /** A wrong-dimension vector — a user's query panel or a corrupt
+    * stored embedding — must raise a descriptive error, not an
     * ArrayIndexOutOfBoundsException from generated code (or a silent
-    * garbage read). One integer compare per ROW — noise next to the
-    * M×k×dsub loops it guards.
+    * garbage read). `input` names what the vector is (the expression's
+    * caller knows: "query vector", "stored embedding"). One integer
+    * compare per ROW — noise next to the M×k×dsub loops it guards.
     */
-  def checkDim(v: ArrayData, m: Int, dsub: Int, op: String): Unit = {
+  def checkDim(v: ArrayData, m: Int, dsub: Int, op: String, input: String): Unit = {
     val n = v.numElements()
     if (n != m * dsub)
       throw new IllegalArgumentException(
-        s"$op: vector has $n components, the PQ model expects " +
-          s"${m * dsub} (m=$m subspaces x dsub=$dsub) — wrong-dimension " +
-          "query vector in the panel?")
+        s"$op: wrong-dimension $input: $n components, the PQ model " +
+          s"expects ${m * dsub} (m=$m subspaces x dsub=$dsub)")
   }
 
   /** Spark-Round-exact quantization of one float component. */
@@ -72,7 +72,8 @@ case class PqEncodeExpr(
     cq: Array[Array[Array[Long]]],
     js: Array[Array[Int]],
     q: Double,
-    dsub: Int)
+    dsub: Int,
+    input: String)
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -87,7 +88,7 @@ case class PqEncodeExpr(
   def encode(a: Any): ArrayData = {
     val v = a.asInstanceOf[ArrayData]
     val m = cq.length
-    PqOps.checkDim(v, m, dsub, prettyName)
+    PqOps.checkDim(v, m, dsub, prettyName, input)
     val codes = new Array[Int](m)
     val xq = new Array[Long](dsub)
     var s = 0
@@ -139,7 +140,8 @@ case class PqDtabExpr(
     child: Expression,
     cqFull: Array[Array[Array[Long]]],
     q: Double,
-    dsub: Int)
+    dsub: Int,
+    input: String)
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -154,7 +156,7 @@ case class PqDtabExpr(
   def dtab(a: Any): ArrayData = {
     val v = a.asInstanceOf[ArrayData]
     val m = cqFull.length
-    PqOps.checkDim(v, m, dsub, prettyName)
+    PqOps.checkDim(v, m, dsub, prettyName, input)
     val k = if (m == 0) 0 else cqFull(0).length
     val out = new Array[Long](m * k)
     val xq = new Array[Long](dsub)
@@ -333,7 +335,8 @@ case class SubD2Expr(left: Expression, right: Expression)
   * of the `xqSubs` HOF (64 Spark-Round-exact roundings per row, no
   * interpreted lambdas). Output: array<array<long>>.
   */
-case class PqQuantSubsExpr(child: Expression, q: Double, m: Int, dsub: Int)
+case class PqQuantSubsExpr(
+    child: Expression, q: Double, m: Int, dsub: Int, input: String)
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -348,7 +351,7 @@ case class PqQuantSubsExpr(child: Expression, q: Double, m: Int, dsub: Int)
 
   def subs(a: Any): ArrayData = {
     val v = a.asInstanceOf[ArrayData]
-    PqOps.checkDim(v, m, dsub, prettyName)
+    PqOps.checkDim(v, m, dsub, prettyName, input)
     val out = new Array[ArrayData](m)
     var s = 0
     while (s < m) {

@@ -381,11 +381,8 @@ object Formats {
       .map(_.getPath)
       .filter(p => p.getName.endsWith(".parquet"))
       .flatMap { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getFooter.getBlocks.asScala
+        graft.ParquetFooters.read(p, conf).getBlocks.asScala
           .flatMap(_.getColumns.asScala.map(_.getCodec.toString))
-        finally r.close()
       }
       .toSet
   }

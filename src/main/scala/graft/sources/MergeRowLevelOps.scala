@@ -8,6 +8,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.streaming.MergeSink
 
@@ -100,7 +101,7 @@ class GraftMergeDeltaWrite(
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DeltaWriterFactory =
       MergeDeltaWriterFactory(
-        new SerializableHadoopConf(
+        new SerializableConfiguration(
           SparkSession.active.sessionState.newHadoopConf()),
         MergeWriteUtil.stagingDir(dir, queryId),
         tableSchema, key, seq)
@@ -127,7 +128,7 @@ class GraftMergeDeltaWrite(
   * would capture the non-serializable write).
   */
 case class MergeDeltaWriterFactory(
-    conf: SerializableHadoopConf,
+    conf: SerializableConfiguration,
     staging: String,
     tableSchema: StructType,
     key: String,

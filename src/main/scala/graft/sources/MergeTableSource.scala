@@ -9,7 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
@@ -27,6 +26,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualNullSafe, EqualTo,
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.streaming.MergeSink
 
@@ -197,11 +197,8 @@ private[graft] object MergeTableUtil {
     }
   }
 
-  def footerOf(conf: Configuration, file: String): MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    try r.getFooter.getFileMetaData.getSchema
-    finally r.close()
-  }
+  def footerOf(conf: Configuration, file: String): MessageType =
+    graft.ParquetFooters.read(new Path(file), conf).getFileMetaData.getSchema
 
   /** Spark type for one flat parquet primitive (the merge table is flat
     * by construction — Spark wrote its buckets).
@@ -782,10 +779,8 @@ private[graft] object FooterStats {
     var totalRows = 0L
     val byCol = scala.collection.mutable.Map.empty[String, ColStats]
     files.foreach { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f), conf))
-      try {
-        r.getFooter.getBlocks.asScala.foreach { block =>
+      graft.ParquetFooters.read(new Path(f), conf)
+        .getBlocks.asScala.foreach { block =>
           totalRows += block.getRowCount
           block.getColumns.asScala.foreach { chunk =>
             val name = chunk.getPath.toDotString
@@ -818,7 +813,6 @@ private[graft] object FooterStats {
               prev.valueCount + chunk.getValueCount, nulls, mn, mx, ok)
           }
         }
-      } finally r.close()
     }
     def toCatalyst(v: Any, dt: DataType): Any = (v, dt) match {
       case (b: org.apache.parquet.io.api.Binary, StringType) =>
@@ -1606,7 +1600,7 @@ class GraftMergeScan(
           catch { case _: IllegalArgumentException => false /* empty */ })
       }
       new MergeReaderFactory(
-        new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+        new SerializableConfiguration(spark.sessionState.newHadoopConf()),
         required,
         hideTombstones = tombstonesPossible,
         pushed)
@@ -1762,27 +1756,13 @@ class GraftMergeMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MergeReaderFactory(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       required,
       hideTombstones = false,
       pushedFilters = Array.empty)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** Hadoop Configuration is Writable but not Serializable; wrap it. */
-class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 /** Reader factory: VECTORIZED. Every partition reads through Spark's
@@ -1809,7 +1789,7 @@ class SerializableHadoopConf(@transient var value: Configuration)
   *     table's delete rate — copies only survivors.
   */
 class MergeReaderFactory(
-    conf: SerializableHadoopConf,
+    conf: SerializableConfiguration,
     required: StructType,
     hideTombstones: Boolean,
     pushedFilters: Array[Filter])
@@ -1936,11 +1916,8 @@ class MergeColumnarReader(
     val fs = path.getFileSystem(conf)
     HadoopInputFile.fromStatus(fs.getFileStatus(path), conf)
   }
-  private val footer: org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    val r = ParquetFileReader.open(inputFile)
-    try r.getFooter
-    finally r.close()
-  }
+  private val footer: org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    graft.ParquetFooters.read(inputFile, conf)
   private val fileSchema = footer.getFileMetaData.getSchema
 
   // Requested DATA schema: required data fields (declared order), plus

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.streaming.MergeSink
 
@@ -282,7 +283,7 @@ class GraftMergeBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     MergeStagingWriterFactory(
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
+      new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf()),
       MergeWriteUtil.stagingDir(dir, queryId),
       schema)
 
@@ -310,7 +311,7 @@ class GraftMergeStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     MergeStagingWriterFactory(
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
+      new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf()),
       MergeWriteUtil.stagingDir(dir, queryId),
       schema)
 
@@ -339,7 +340,7 @@ class GraftMergeStreamingWrite(
   * epochs stage under `<staging>/e<epochId>`.
   */
 case class MergeStagingWriterFactory(
-    conf: SerializableHadoopConf,
+    conf: SerializableConfiguration,
     staging: String,
     schema: StructType)
     extends DataWriterFactory with StreamingDataWriterFactory {

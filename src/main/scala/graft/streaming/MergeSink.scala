@@ -2117,7 +2117,6 @@ object MergeSink {
           finally out.close()
           true
         } catch { case _: java.io.IOException if fs.exists(claim) => false }
-    if (tryCreate()) return
     def fail(reason: String): Nothing =
       throw new ConcurrentCommitException(
         s"graft-merge: version $newV of $dir is claimed by another " +
@@ -2125,8 +2124,19 @@ object MergeSink {
           "(MergeSink.withCommitRetry wraps exactly this loop; SQL " +
           "INSERT/DML retry automatically)")
     // already-marked means the race is fully lost, not merely pending
-    if (commits(spark, dir).exists(_.version == newV))
-      fail("its commit marker exists")
+    def committed: Boolean = commits(spark, dir).exists(_.version == newV)
+    // Winning the create is not enough: publish and promotePending
+    // write version N's marker BEFORE they release its claim, so a
+    // writer that planned against N-1 can take a claim the winner
+    // already dropped. A marker seen while holding the claim means N is
+    // minted — release the claim and lose the race loudly.
+    def holdUnlessCommitted(): Unit =
+      if (committed) {
+        fs.delete(claim, false)
+        fail("it is already committed")
+      }
+    if (tryCreate()) return holdUnlessCommitted()
+    if (committed) fail("its commit marker exists")
     val owner =
       try {
         val in = fs.open(claim)
@@ -2144,6 +2154,7 @@ object MergeSink {
     // own retry after a mid-publish failure, or a torn attempt past TTL
     fs.delete(claim, false)
     if (!tryCreate()) fail("claim re-taken during steal")
+    holdUnlessCommitted()
   }
 
   private def publish(
@@ -2282,13 +2293,9 @@ object MergeSink {
                     s"rename failed for bucket $b -> $dst")
                 val parts = fs.listStatus(dst).iterator
                   .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-                val rc = parts.map { st =>
-                  val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                    org.apache.parquet.hadoop.util.HadoopInputFile
-                      .fromPath(st.getPath, hconf))
-                  try r.getRecordCount
-                  finally r.close()
-                }.sum
+                val rc = parts
+                  .map(st => graft.ParquetFooters.rowCount(st.getPath, hconf))
+                  .sum
                 finalized.put(b,
                   (parts.map(_.getPath.getName).sorted,
                     parts.map(_.getLen).sum, rc))
@@ -3729,7 +3736,8 @@ object MergeSink {
     // proceed — safe because they place byte-IDENTICAL content
     // (idempotent links, verbatim manifests, same markers;
     // linkDataDir tolerates the create race), so concurrent identical
-    // publishes CONVERGE rather than mutually exclude.
+    // publishes CONVERGE rather than mutually exclude: a version the
+    // other invocation already promoted is skipped, not failed.
     val branchHead = commits(spark, branchDir).map(_.version).max
     val ffId = "ff" + java.security.MessageDigest.getInstance("MD5")
       .digest(s"$mainDir $branchDir $branchHead".getBytes("UTF-8"))
@@ -3737,8 +3745,8 @@ object MergeSink {
     val claimed = scala.collection.mutable.ArrayBuffer.empty[Long]
     try {
       toPromote.foreach { c =>
-        claimVersion(spark, mfs, mp, c.version, mainDir, ffId)
-        claimed += c.version
+        if (claimForPromotion(spark, mfs, mp, c, mainDir, ffId))
+          claimed += c.version
       }
     } catch {
       case e: Throwable =>
@@ -3754,7 +3762,7 @@ object MergeSink {
     // references them. cv <= mainHead entries already exist on main
     // (the base snapshot or a previously promoted prefix).
     val linkedCv = scala.collection.mutable.HashSet.empty[(Int, Long)]
-    toPromote.foreach { c =>
+    toPromote.filter(c => claimed.contains(c.version)).foreach { c =>
       val v = c.version
       manifest(spark, branchDir, v).foreach { case (b, cv) =>
         if (cv > mainHead && linkedCv.add((b, cv)))
@@ -3769,6 +3777,25 @@ object MergeSink {
     }
     gc(spark, mfs, mp, mainDir, toPromote.last.version)
     toPromote.size.toLong
+  }
+
+  /** Claim main's version `c.version` for promoting branch commit `c`.
+    * False when main already carries that version under `c`'s own
+    * (runId, epoch) — a live invocation of the same publish promoted it
+    * first, so there is nothing left to do for it. Any other
+    * [[ConcurrentCommitException]] (a rival's commit or claim) stands.
+    */
+  private[graft] def claimForPromotion(
+      spark: SparkSession,
+      mfs: FileSystem,
+      mp: Path,
+      c: Commit,
+      mainDir: String,
+      ffId: String): Boolean = {
+    def promoted: Boolean = commits(spark, mainDir).exists(m =>
+      m.version == c.version && m.runId == c.runId && m.epoch == c.epoch)
+    try { claimVersion(spark, mfs, mp, c.version, mainDir, ffId); true }
+    catch { case _: ConcurrentCommitException if promoted => false }
   }
 
   /** `ALTER TABLE … ADD COLUMN(S)` — a SCHEMA-ONLY commit: a new

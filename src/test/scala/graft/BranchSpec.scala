@@ -291,4 +291,30 @@ class BranchSpec extends SparkSpec {
     assert(MergeSink.fastForward(spark, main, dev) == 1L)
     assert(state(main) == state(dev))
   }
+
+  test("a live rerun of the same fast-forward skips a version already promoted") {
+    val main = tmp("graft_br_main_rerun")
+    val dev = tmp("graft_br_dev_rerun")
+    MergeSink.setHistoryKeep(spark, main, 8)
+    MergeSink.upsertBatch(rows(0 until 20, 1), main, "id", "rv", 0L, "w")
+    MergeSink.branchTable(spark, main, dev)
+    MergeSink.setHistoryKeep(spark, dev, 8)
+    MergeSink.upsertBatch(rows(30 until 40, 2), dev, "id", "rv", 1L, "b")
+    val c = MergeSink.lastCommit(spark, dev).get
+    // the other invocation promotes c after this one planned it
+    assert(MergeSink.fastForward(spark, main, dev) == 1L)
+    val mp = new org.apache.hadoop.fs.Path(main)
+    val mfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!MergeSink.claimForPromotion(spark, mfs, mp, c, main, "ffrerun"),
+      "an already-promoted version must be skipped, not re-minted")
+    assert(!mfs.exists(new org.apache.hadoop.fs.Path(mp, s"_claim_v${c.version}")),
+      "the skipped version's claim was left behind")
+    // a version main carries under ANOTHER commit is a lost race
+    intercept[MergeSink.ConcurrentCommitException] {
+      MergeSink.claimForPromotion(
+        spark, mfs, mp, c.copy(runId = "rival"), main, "ffrerun")
+    }
+    assert(MergeSink.commits(spark, main).count(_.version == c.version) == 1)
+    assert(state(main) == state(dev))
+  }
 }

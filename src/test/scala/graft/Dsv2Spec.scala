@@ -1210,4 +1210,90 @@ class Dsv2Spec extends SparkSpec {
     assert(got.keySet == Set(1L, 3L, 5L))
     Seq(1L, 3L, 5L).foreach(i => assert(got(i) == vec(i), s"id $i"))
   }
+
+  test("a row-group predicate never leaks into a partition's shared reader conf") {
+    val s2 = spark
+    import s2.implicits._
+    val table = freshTable()
+    // many row groups per bucket file, key-sorted by compaction, so a
+    // key range predicate really skips row groups
+    spark.conf.set("parquet.block.size", "65536")
+    try {
+      val n = 80000L
+      MergeSink.upsertBatch(
+        spark.range(n).select(col("id").as("k"), lit(1L).as("seq"),
+          md5(col("id").cast("string")).as("tag")),
+        table, "k", "seq", 0L, "leak")
+      assert(MergeSink.compact(spark, table, "k", targetBuckets = 8) == 8)
+    } finally spark.conf.unset("parquet.block.size")
+    // packed (not storage-partitioned) planning: one reader walks
+    // several bucket files in turn
+    val spj = "spark.sql.sources.v2.bucketing.enabled"
+    val savedSpj = spark.conf.getOption(spj)
+    spark.conf.set(spj, "false")
+    try {
+      val df = spark.read.format("graft-merge")
+        .option("path", table).option("key", "k").load()
+      val parts = df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.toBatch.planInputPartitions().toSeq
+      }.get
+      assert(parts.exists(_.asInstanceOf[graft.sources.MergeFilePartition]
+        .splits.size > 1), s"no multi-file partition: $parts")
+      def keys(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+        d.select("k").as[Long].collect().sorted.toSeq
+      // filtered and unfiltered scans interleaved in one session: each
+      // returns exactly its rows, whatever ran before it
+      (1 to 2).foreach { round =>
+        assert(keys(df.filter(col("k") > 76000L)) == (76001L until 80000L),
+          s"round $round: high range")
+        assert(keys(df) == (0L until 80000L), s"round $round: full scan")
+        assert(keys(df.filter(col("k") <= 4000L)) == (0L to 4000L),
+          s"round $round: low range")
+      }
+    } finally savedSpj.fold(spark.conf.unset(spj))(spark.conf.set(spj, _))
+    // the same through one partition's prepared confs directly: the
+    // filtered read skips row groups on a private copy; the shared
+    // confs stay clean
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("k", "long").add("seq", "long").add("tag", "string")
+    val base = spark.sessionState.newHadoopConf()
+    val confs = Seq(false, true).map(nd => nd ->
+      graft.sources.MergeColumnarReader.preparedConf(base, schema, nd)).toMap
+    val file = MergeSink.currentFiles(spark, table).values.flatten.head
+    def rowsRead(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
+      val r = new graft.sources.MergeColumnarReader(
+        base, graft.sources.MergeFileSplit(file, 0, 0L, 0L), schema,
+        hideTombstones = true, pushedFilters = filters, confFor = confs)
+      try {
+        var rows = 0L
+        while (r.next()) rows += r.get().numRows()
+        rows
+      } finally r.close()
+    }
+    val all = rowsRead(Array.empty)
+    val pruned = rowsRead(Array(
+      org.apache.spark.sql.sources.GreaterThan("k", 76000L)))
+    assert(pruned < all / 2, s"row groups not skipped: read $pruned of $all")
+    assert(rowsRead(Array.empty) == all, "a full read after a filtered one lost rows")
+    Seq(false, true).foreach { nd =>
+      assert(confs(nd).get(org.apache.parquet.hadoop.ParquetInputFormat
+        .FILTER_PREDICATE) == null, s"predicate leaked (needDeleted=$nd)")
+    }
+  }
+
+  test("every parquet footer open in src/main passes read options, through ParquetFooters") {
+    // a one-argument ParquetFileReader.open(InputFile) builds a fresh
+    // default Hadoop Configuration per call (about 10 ms of CPU)
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 10, s"source tree not found under ${root.toAbsolutePath}")
+    val bad = files.filter { f =>
+      f.getFileName.toString != "ParquetFooters.scala" &&
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          .contains("ParquetFileReader")
+    }
+    assert(bad.isEmpty, s"parquet footer reads outside ParquetFooters: $bad")
+  }
 }

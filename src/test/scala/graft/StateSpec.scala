@@ -1389,6 +1389,53 @@ class StateSpec extends SparkSpec {
     c3.delete(held, false)
   }
 
+  test("a writer that planned before a rival's commit cannot mint that version again") {
+    val s2 = spark
+    import s2.implicits._
+    val MS = graft.streaming.MergeSink
+    val table = Files.createTempDirectory("graft_remint").toString
+    MS.setHistoryKeep(spark, table, 10)
+    MS.upsertBatch(
+      Seq((0L, 1L, 0.0)).toDF("k", "seq", "v"), table, "k", "seq", 0L, "w0")
+    // writer A's batch blocks on its first evaluation — the
+    // touched-bucket probe, AFTER A planned v1 and BEFORE its claim —
+    // until writer B has committed v1 and released B's claim
+    PlanGate.arm()
+    val gate = udf((_: Long) => PlanGate.pass())
+    val aBatch = spark.range(1L, 6L)
+      .select(col("id").as("k"), lit(1L).as("seq"), (col("id") * 1.0).as("v"))
+      .filter(gate(col("k")))
+    @volatile var aErr: Throwable = null
+    val a = new Thread(() => {
+      try MS.withCommitRetry(maxAttempts = 10, backoffMs = 50L) {
+        MS.upsertBatch(aBatch, table, "k", "seq", 0L, "wa", reRegister = true)
+      } catch { case t: Throwable => aErr = t }
+    })
+    a.start()
+    try {
+      assert(PlanGate.planned.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "writer A never reached its plan")
+      MS.upsertBatch(
+        (6L to 10L).map(k => (k, 1L, k * 1.0)).toDF("k", "seq", "v"),
+        table, "k", "seq", 0L, "wb", reRegister = true)
+    } finally PlanGate.released.countDown()
+    a.join(300000L)
+    assert(!a.isAlive, "writer A did not finish")
+    assert(aErr == null, s"writer A failed: $aErr")
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val Marker = "_commit_v(\\d+)_.*".r
+    val markers = fs.listStatus(p).map(_.getPath.getName)
+      .collect { case n @ Marker(v) => v.toLong -> n }
+      .groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2).toSeq }
+    assert(markers.keySet == Set(0L, 1L, 2L), markers.toString)
+    assert(markers.values.forall(_.size == 1),
+      s"a version was minted twice: $markers")
+    val keys = MS.currentState(spark, table).get
+      .select("k").as[Long].collect().sorted.toSeq
+    assert(keys == (0L to 10L), s"rows lost: $keys")
+  }
+
   test("time-based retention: history_keep_ms keeps young versions beyond the depth window") {
     val s2 = spark
     import s2.implicits._
@@ -1456,5 +1503,30 @@ class StateSpec extends SparkSpec {
       Seq((9L, 99L, 9.0)).toDF("k", "seq", "v"), table, "k", "seq", 9L, "hk")
     val after = MS.commits(spark, table).map(_.version).sorted
     assert(after.sameElements(Array(3L, 4L)), after.toSeq.toString)
+  }
+}
+
+/** Holds one writer inside its plan (see the version re-mint test in
+  * [[StateSpec]]). An object, so the UDF's task-side closure reaches
+  * the same latches as the test thread.
+  */
+object PlanGate {
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile var planned = new java.util.concurrent.CountDownLatch(1)
+  @volatile var released = new java.util.concurrent.CountDownLatch(1)
+
+  def arm(): Unit = {
+    planned = new java.util.concurrent.CountDownLatch(1)
+    released = new java.util.concurrent.CountDownLatch(1)
+    armed.set(true)
+  }
+
+  /** Always true; the first call after [[arm]] waits for the release. */
+  def pass(): Boolean = {
+    if (armed.compareAndSet(true, false)) {
+      planned.countDown()
+      released.await(300, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    true
   }
 }

@@ -110,12 +110,22 @@ class VecExprSpec extends SparkSpec {
     val df = spark.range(4).select(
       array(col("id"), col("id") + 1).as("a"),
       array(col("id") * 2, col("id")).as("b"))
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     val plan = df
       .select(Exprs.column(graft.plans.SubD2Expr(
         Exprs.expression(col("a")), Exprs.expression(col("b")))).as("d"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project [sub_d2"),
-      s"sub_d2 not inside a codegen stage:\n$plan")
+      .queryExecution.executedPlan
+    // the sub_d2 Project must sit INSIDE a codegen stage: below a
+    // WholeStageCodegenExec and above the stage's InputAdapter boundary
+    def stagedSubD2(p: SparkPlan): Seq[ProjectExec] = p match {
+      case _: InputAdapter => Nil
+      case pe: ProjectExec
+          if pe.projectList.exists(_.exists(_.isInstanceOf[graft.plans.SubD2Expr])) =>
+        Seq(pe)
+      case other => other.children.flatMap(stagedSubD2)
+    }
+    val staged = plan.collect { case w: WholeStageCodegenExec => stagedSubD2(w.child) }
+    assert(staged.flatten.nonEmpty, s"sub_d2 not inside a codegen stage:\n$plan")
   }
 
   test("PQ expressions reject a wrong-dimension panel vector loudly") {
@@ -124,13 +134,13 @@ class VecExprSpec extends SparkSpec {
     val df = Seq((1L, Array.fill(7)(0.5f))).toDF("id", "v") // dim 7, not m*dsub
     import org.apache.spark.sql.graft.Exprs
     val bad = df.select(Exprs.column(graft.plans.PqQuantSubsExpr(
-      Exprs.expression(col("v")), 1000.0, 16, 4)).as("q"))
+      Exprs.expression(col("v")), 1000.0, 16, 4, "query vector")).as("q"))
     val e = intercept[Exception] { bad.collect() }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
         Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("wrong-dimension")),
-      s"expected a descriptive dimension error, got: $e")
+    assert(messages(e).exists(_.contains("wrong-dimension query vector: 7 components")),
+      s"expected a dimension error naming the input, got: $e")
   }
 
   test("JaccardGE == rearranged array_intersect threshold on random sorted sets") {
