@@ -779,10 +779,8 @@ class GraftCatalog
     // later source commit under autoRefreshMv/autoRefreshAnn
     // re-materialize — or fail against — a dropped table. Best-effort:
     // an unresolvable source must not block the drop.
-    Seq("graft.ann.source", "graft.mv.source", "graft.mv.dim")
-      .flatMap(k => Option(props.getProperty(k)))
-      .++(Option(props.getProperty("graft.mv.dims")).toSeq
-        .flatMap(_.split(';').map(_.split(':').head.trim)))
+    (Option(props.getProperty("graft.ann.source")).toSeq ++
+      MaterializedViews.viewSources(k => Option(props.getProperty(k))))
       .foreach { srcIdent =>
         try MaterializedViews.unregisterDependent(
           SparkSession.active,
@@ -1609,8 +1607,9 @@ object GraftProcedures {
 
   /** `CALL cat.sys.create_mv_join('db.mv', 'db.fact', 'db.dim',
     * 'fk=pk', 'g1[,g2]', 'total=sum:cents,m=avg:cents', 'algebraic')`
-    * — a MATERIALIZED VIEW over a star join, maintained by delta-join
-    * IVM ([[MaterializedViews.refreshJoinDir]]).
+    * — a MATERIALIZED VIEW over fact ⋈ dim: the one-dim case of
+    * [[MaterializedViews.create]], maintained by delta-join IVM
+    * ([[MaterializedViews.refreshDir]] with one dim).
     */
   final class CreateMvJoinProc(cat: GraftCatalog)
       extends MaintenanceProc(cat, "create_mv_join", "groups_materialized",
@@ -1626,23 +1625,23 @@ object GraftProcedures {
     override protected def run(
         opts: Map[String, String], input: InternalRow): Int = 0 // unused
     override def call(input: InternalRow): java.util.Iterator[Scan] =
-      oneRow(MaterializedViews.createJoin(
+      oneRow(MaterializedViews.create(
         SparkSession.active, cat,
         mvIdent = input.getUTF8String(0).toString,
-        factIdent = input.getUTF8String(1).toString,
-        dimIdent = input.getUTF8String(2).toString,
-        on = input.getUTF8String(3).toString,
+        srcIdent = input.getUTF8String(1).toString,
         groupCols = input.getUTF8String(4).toString
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq,
         aggs = MaterializedViews.parseAggs(input.getUTF8String(5).toString),
-        mode = input.getUTF8String(6).toString).toInt)
+        mode = input.getUTF8String(6).toString,
+        dims = MaterializedViews.parseDimsSpec(
+          s"${input.getUTF8String(2)}:${input.getUTF8String(3)}")).toInt)
   }
 
   /** `CALL cat.sys.create_mv_star('db.mv', 'db.fact',
     * 'db.d1:fk1=pk1;db.d2:fk2=pk2', 'g1[,g2]', 'total=sum:cents',
-    * 'algebraic')` — a MATERIALIZED VIEW over one fact ⋈ N dims,
-    * maintained by per-source delta-join IVM
-    * ([[MaterializedViews.refreshStarDir]]).
+    * 'algebraic')` — a MATERIALIZED VIEW over one fact ⋈ N dims
+    * ([[MaterializedViews.create]]), maintained by per-source
+    * delta-join IVM ([[MaterializedViews.refreshDir]]).
     */
   final class CreateMvStarProc(cat: GraftCatalog)
       extends MaintenanceProc(cat, "create_mv_star", "groups_materialized",
@@ -1656,22 +1655,25 @@ object GraftProcedures {
       "create a materialized view over fact JOIN n dims (delta-join IVM)"
     override protected def run(
         opts: Map[String, String], input: InternalRow): Int = 0 // unused
-    override def call(input: InternalRow): java.util.Iterator[Scan] =
-      oneRow(MaterializedViews.createStar(
+    override def call(input: InternalRow): java.util.Iterator[Scan] = {
+      val dims = MaterializedViews.parseDimsSpec(input.getUTF8String(2).toString)
+      require(dims.nonEmpty, "create_mv_star: at least one dimension")
+      oneRow(MaterializedViews.create(
         SparkSession.active, cat,
         mvIdent = input.getUTF8String(0).toString,
-        factIdent = input.getUTF8String(1).toString,
-        dimsSpec = input.getUTF8String(2).toString,
+        srcIdent = input.getUTF8String(1).toString,
         groupCols = input.getUTF8String(3).toString
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq,
         aggs = MaterializedViews.parseAggs(input.getUTF8String(4).toString),
-        mode = input.getUTF8String(5).toString).toInt)
+        mode = input.getUTF8String(5).toString,
+        dims = dims).toInt)
+    }
   }
 
-  /** `CALL cat.sys.refresh_mv('db.mv')` — advance the view to its
-    * source's head: algebraic delta fold or touched-group rescan,
-    * O(changed groups) either way; full rebuild only when the last
-    * applied source version fell out of retention. Returns the number
+  /** `CALL cat.sys.refresh_mv('db.mv')` — advance the view to every
+    * source's head ([[MaterializedViews.refreshDir]]): algebraic delta
+    * fold or touched-group rescan, O(changed groups) either way; full
+    * rebuild only when an applied source version fell out of retention. Returns the number
     * of view rows written (0 = already current).
     */
   final class RefreshMvProc(cat: GraftCatalog)
@@ -1772,8 +1774,8 @@ object GraftProcedures {
   }
 
   /** `CALL cat.sys.refresh_dependents('ns.src')` — refresh every
-    * materialized view defined over the named table
-    * ([[MaterializedViews.refreshDependents]]); the post-commit
+    * materialized view that reads the named table as its source or as
+    * a dim ([[MaterializedViews.refreshDependents]]); the post-commit
     * maintenance move. Returns the number of views refreshed (views
     * already at head count too — each refresh is independently
     * exactly-once and a no-op there).

@@ -8,10 +8,12 @@ import graft.streaming.MergeSink
 
 /** MATERIALIZED VIEWS with INCREMENTAL REFRESH over merge tables.
   *
-  * A view is a grouped aggregate of ONE source table, materialized as
-  * an ordinary merge table keyed by the grouping columns — readable,
-  * time-travelable, and streamable like any other table. `refresh`
-  * advances it to the source's head snapshot:
+  * A view is a grouped aggregate of ONE source table (the fact),
+  * optionally inner-joined to N dimension tables, materialized as an
+  * ordinary merge table keyed by the grouping columns — readable,
+  * time-travelable, and streamable like any other table. ONE driver,
+  * [[refreshDir]], advances every view to its sources' heads (a
+  * single-table view is the star with 0 dims):
   *
   *  - `algebraic` mode (sum/count): folds the source's retraction
   *    delta ([[MergeSink.changeDelta]]) into the stored aggregates —
@@ -25,10 +27,11 @@ import graft.streaming.MergeSink
   *    never read or written.
   *
   * EXACTLY-ONCE refresh rides the engine's own idempotence contract:
-  * the view commit is an upsert under a stable per-view `runId` with
-  * `epoch = source head version`. The applied source version is thus
-  * recorded IN the commit log itself — a crashed refresh replays as a
-  * no-op, and there is no out-of-band watermark to desynchronize. The
+  * the view commit is an upsert under a stable per-view `runId` whose
+  * manifest note records the applied version of every source. The
+  * watermark is thus IN the commit log itself — a crashed refresh
+  * replays as a no-op, and there is no out-of-band watermark to
+  * desynchronize. The
   * analytic dual of the reference's derived-ref pattern (a `ref`
   * holding a fold of others, recomputed inside the same `dosync` —
   * /root/reference/src/opusdb/examples/bank.clj:41-44 keeps the
@@ -286,10 +289,8 @@ object MaterializedViews {
     * not be re-derived from the path string there.
     */
   private def recordSources(
-      spark: SparkSession, mvDir: String, dirs: Seq[String],
-      star: Boolean = false): Unit = {
-    val kind = if (star) "runstar" else "run"
-    val lines = s"$kind\t${mvRunId(mvDir)}" +: dirs
+      spark: SparkSession, mvDir: String, dirs: Seq[String]): Unit = {
+    val lines = s"run\t${mvRunId(mvDir)}" +: dirs
     if (sidecarLines(spark, mvDir, "_mv_sources") != lines)
       writeSidecar(spark, mvDir, "_mv_sources", lines)
   }
@@ -323,20 +324,11 @@ object MaterializedViews {
     try {
       val results = lines.flatMap { l =>
         l.split('\t') match {
-          case Array("single", mvDir, srcKey, group, aggsSpec, mode) =>
-            Some(mvDir -> refreshDir(spark, srcDir, srcKey, mvDir,
-              group.split(',').toSeq.map(_.trim), parseAggs(aggsSpec), mode))
-          case Array("join", mvDir, fDir, fKey, dDir, dKey, fk, pk,
-              group, aggsSpec, mode) =>
-            Some(mvDir -> refreshJoinDir(spark, fDir, fKey, dDir, dKey,
-              fk, pk, mvDir, group.split(',').toSeq.map(_.trim),
-              parseAggs(aggsSpec), mode))
           case Array("star", mvDir, fDir, fKey, dimsSpec, group,
               aggsSpec, mode) =>
-            Some(mvDir -> refreshStarDir(spark, fDir, fKey,
-              parseStarDims(dimsSpec), mvDir,
-              group.split(',').toSeq.map(_.trim),
-              parseAggs(aggsSpec), mode))
+            Some(mvDir -> refreshDir(spark, fDir, fKey, mvDir,
+              group.split(',').toSeq.map(_.trim), parseAggs(aggsSpec), mode,
+              parseStarDims(dimsSpec)))
           case _ => None
         }
       }
@@ -344,73 +336,96 @@ object MaterializedViews {
     } finally set.remove(srcDir)
   }
 
-  /** The view's staleness: (its source dirs, lag in source versions not
+  /** The view's staleness: (its source dirs, total source versions not
     * yet applied). None when the dir is not a refreshed view (or never
     * refreshed — nothing applied to measure against). Surfaces in the
     * `.detail` metadata table as mv_sources / mv_lag_versions.
     */
-  def viewLag(spark: SparkSession, mvDir: String): Option[(String, Long)] = {
-    val lines = sidecarLines(spark, mvDir, "_mv_sources")
-    if (lines.isEmpty) return None
-    // star views: the applied-version VECTOR rides the newest commit's
-    // manifest note; lag = total unapplied versions across all sources
-    if (lines.head.startsWith("runstar\t")) {
-      val srcs = lines.tail
-      val runId = lines.head.split('\t') match {
-        case Array("runstar", id) => id
-        case _ => mvRunId(mvDir)
-      }
-      val vec = starVector(spark, mvDir, runId) match {
-        case Some(v) if v.size == srcs.size => v
-        case _ => return None // never refreshed (or torn sidecar)
-      }
-      val lag = srcs.zip(vec).map { case (s, a) =>
-        MergeSink.lastCommit(spark, s).map(h => math.max(h.version - a, 0L))
-          .getOrElse(0L)
-      }.sum
-      return Some((srcs.mkString(","), lag))
+  def viewLag(spark: SparkSession, mvDir: String): Option[(String, Long)] =
+    sidecarLines(spark, mvDir, "_mv_sources") match {
+      case header +: srcs if srcs.nonEmpty && header.startsWith("run\t") =>
+        appliedVector(spark, mvDir, header.stripPrefix("run\t"))
+          .filter(_.size == srcs.size)
+          .map { vec =>
+            val lag = srcs.zip(vec).map { case (s, a) =>
+              MergeSink.lastCommit(spark, s)
+                .map(h => math.max(h.version - a, 0L)).getOrElse(0L)
+            }.sum
+            (srcs.mkString(","), lag)
+          }
+      case _ => None
     }
-    val runId = lines.head.split('\t') match {
-      case Array("run", id) => id
-      case _ => mvRunId(mvDir) // legacy sidecar without the id line
-    }
-    val srcs =
-      if (lines.head.startsWith("run\t")) lines.tail else lines
-    if (srcs.isEmpty) return None
-    val applied = MergeSink.commits(spark, mvDir)
-      .filter(_.runId == runId).map(_.epoch).maxOption
-    applied.map { a =>
-      val lag = srcs match {
-        case Seq(s) =>
-          MergeSink.lastCommit(spark, s).map(_.version - a).getOrElse(0L)
-        case Seq(f, dm) =>
-          val (f0, d0) = unpackVersions(a)
-          val fh = MergeSink.lastCommit(spark, f)
-            .map(_.version).getOrElse(f0)
-          val dh = MergeSink.lastCommit(spark, dm)
-            .map(_.version).getOrElse(d0)
-          (fh - f0) + (dh - d0)
-        case _ => 0L
-      }
-      (srcs.mkString(","), math.max(lag, 0L))
-    }
-  }
 
   /** Stable per-view writer identity: commits under it carry the
-    * applied source version as their epoch. Digest of the view path —
-    * runIds ride marker FILENAMES, so no separators allowed.
+    * applied-version vector (see [[vectorNote]]). Digest of the view
+    * path — runIds ride marker FILENAMES, so no separators allowed. The
+    * `mvv-` prefix keeps it apart from the `mv-` writer of views
+    * materialized before the vector note was the only watermark: such a
+    * view finds no applied vector under this id and is rebuilt in full
+    * once, never mistaken for current.
     */
   private def mvRunId(mvDir: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    "mv-" + md.digest(mvDir.getBytes("UTF-8"))
+    "mvv-" + md.digest(mvDir.getBytes("UTF-8"))
       .take(6).map(b => f"$b%02x").mkString
   }
 
-  /** Advance the view at `mvDir` to the source's current head.
-    * Returns the number of groups written (0 = already current).
-    * The FIRST refresh materializes the full aggregate; later ones go
-    * through the incremental path of `mode` unless the last-applied
-    * version fell out of source retention (full rebuild fallback).
+  // ------------------------------------------------------------------
+  // ONE REFRESH DRIVER for every view: a GROUP BY over one source (the
+  // fact) inner-joined to N ≥ 0 dims — a single-table view is N = 0, a
+  // fact ⋈ dim view N = 1. Delta-join maintenance (bag semantics)
+  // telescopes: advancing the applied vector (a0, a1, …, an) to the
+  // heads (h0, h1, …, hn) is one SEQUENTIAL pass per moved source, and
+  // pass i applies Δsource_i ⋈ (every OTHER source PINNED at its
+  // working version — heads for j < i, applied for j > i). Source i
+  // itself is never read by its own pass (its delta stands in for
+  // it), so with N = 0 the algebraic pass reads no source state at
+  // all: O(changed keys), not O(table). Each pass commits under the
+  // view's one writer id — independently exactly-once (the watermark
+  // lives in the commit log, no out-of-band state) — and a crash
+  // between passes leaves a consistent mixed cut that the next
+  // refresh completes.
+  // ------------------------------------------------------------------
+
+  /** One dimension of a view: its table dir, merge key, and the
+    * fact-side / dim-side join columns.
+    */
+  final case class StarDim(dir: String, key: String, fk: String, pk: String)
+
+  /** The view's applied-version vector rides the commit artifact
+    * itself — a `W mvv <v0>,<v1>,…` manifest note under the view's ONE
+    * writer id, with `epoch = Σ versions` (strictly monotone: every
+    * pass advances one component; a single-table view's epoch IS its
+    * source version). The NEWEST commit therefore always carries the
+    * whole vector, so no retention setting can age a watermark out
+    * from under the view.
+    */
+  private def vectorNote(vs: Seq[Long]): String = "mvv " + vs.mkString(",")
+
+  private def appliedVector(
+      spark: SparkSession, mvDir: String, runId: String): Option[Seq[Long]] =
+    MergeSink.commits(spark, mvDir).filter(_.runId == runId).lastOption
+      .flatMap(c => MergeSink.manifestNote(spark, mvDir, c.version))
+      .filter(_.startsWith("mvv "))
+      .map(_.stripPrefix("mvv ").split(',').toSeq.map(_.trim.toLong))
+
+  /** `dir,key,fk,pk;dir,key,fk,pk` — the registration-line encoding
+    * (empty for a single-table view).
+    */
+  private[graft] def parseStarDims(spec: String): Seq[StarDim] =
+    spec.split(';').toSeq.filter(_.nonEmpty).map(_.split(',') match {
+      case Array(d, k, fk, pk) => StarDim(d, k, fk, pk)
+      case other => throw new IllegalArgumentException(
+        s"materialized view: bad dim spec '${other.mkString(",")}'")
+    })
+
+  /** Advance the view at `mvDir` — the grouped aggregate of `srcDir`
+    * inner-joined to `dims` (of `srcDir` alone when `dims` is empty) —
+    * to every source's head. Returns the groups written across all
+    * passes (0 = already current everywhere). The FIRST refresh
+    * materializes the full aggregate; later ones go through the
+    * incremental path of `mode` unless an applied version fell out of
+    * its source's retention (full rebuild fallback).
     */
   def refreshDir(
       spark: SparkSession,
@@ -419,315 +434,26 @@ object MaterializedViews {
       mvDir: String,
       groupCols: Seq[String],
       aggs: Seq[Agg],
-      mode: String): Long = {
+      mode: String,
+      dims: Seq[StarDim] = Nil): Long = {
     require(mode == "algebraic" || mode == "rescan",
       s"materialized view: unknown mode '$mode' (algebraic | rescan)")
     val groupCsv = groupCols.mkString(",")
-    registerDependent(spark, srcDir, mvDir,
-      Seq("single", mvDir, srcKey, groupCsv, aggsSpecOf(aggs), mode)
-        .mkString("\t"))
-    recordSources(spark, mvDir, Seq(srcDir))
-    val runId = mvRunId(mvDir)
-    val srcHead = MergeSink.lastCommit(spark, srcDir) match {
-      case Some(c) => c.version
-      case None => return 0L // unborn source: nothing to materialize
-    }
-    val applied = MergeSink.commits(spark, mvDir)
-      .filter(_.runId == runId).map(_.epoch).maxOption
-    if (applied.contains(srcHead)) return 0L
-
-    def srcState: DataFrame =
-      MergeSink.currentState(spark, srcDir).getOrElse(
-        spark.emptyDataFrame)
-
-    def fullRebuild(): Long = {
-      val full = fullAggregate(srcState, groupCols, aggs)
-        .withColumn(RefreshCol, lit(srcHead))
-      MergeSink.overwriteBatch(
-        full, mvDir, groupCsv, RefreshCol, epochId = srcHead, runId = runId)
-      MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L)
-    }
-
-    applied match {
-      case Some(fromV)
-          if MergeSink.commits(spark, srcDir).exists(_.version == fromV) =>
-        MergeSink.changeDelta(spark, srcDir, srcKey, fromV, srcHead) match {
-          case None =>
-            // data unchanged across the range (metadata-only commits):
-            // record the applied head with an empty idempotent commit
-            MergeSink.currentState(spark, mvDir).foreach(st =>
-              MergeSink.upsertBatch(
-                st.limit(0), mvDir, groupCsv, RefreshCol,
-                epochId = srcHead, runId = runId))
-            0L
-          case Some(delta0) =>
-            // the retraction probe is a SECOND consumer of the delta —
-            // materialize once so probe + refresh share the blocks
-            val delta =
-              if (mode == "algebraic" && hasMinMax(aggs))
-                delta0.localCheckpoint()
-              else delta0
-            mode match {
-            case "algebraic"
-                // min/max fold only over an insert-only range: a
-                // retraction could remove the stored extremum, which
-                // no fold can undo — those ranges rescan instead
-                // (touched groups only; the common append-only case
-                // keeps the O(changed keys) fold)
-                if hasMinMax(aggs) && {
-                  val retracting = delta
-                    .filter(col("__mult") < 0).limit(1).count() > 0
-                  if (retracting) minmaxRescanCount.incrementAndGet()
-                  else minmaxFoldCount.incrementAndGet()
-                  retracting
-                } =>
-              refreshRescan(
-                spark, delta, srcState, mvDir, groupCols, aggs, groupCsv,
-                srcHead, runId)
-            case "algebraic" => refreshAlgebraic(
-              spark, delta, mvDir, groupCols, aggs, groupCsv, srcHead, runId)
-            case "rescan" => refreshRescan(
-              spark, delta, srcState, mvDir, groupCols, aggs, groupCsv,
-              srcHead, runId)
-          }
-        }
-      case _ => fullRebuild()
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // MV OVER A JOIN (star-schema IVM): view = GROUP BY over
-  // `fact ⋈ dim ON fact.fk = dim.pk`. Delta-join maintenance — the
-  // established algebra (F'⋈D' − F⋈D = ΔF⋈D' + F⋈ΔD, bag semantics):
-  // the fact's retraction delta joins the dim's NEW state, the dim's
-  // retraction delta joins the fact's OLD snapshot (time travel), and
-  // the union folds through the same algebraic machinery as the
-  // single-table view. A day of fact changes costs O(Δ ⋈ dim) — the
-  // dim broadcast the fact commit already paid; a dim change costs one
-  // semi-pruned fact pass against Δdim (rare for slowly-changing
-  // dims, and inherent to delta-join IVM without an FK index).
-  // ------------------------------------------------------------------
-
-  /** Both applied versions ride ONE commit epoch: (factV << 31) | dimV.
-    * 2^31 versions per table ≈ 68 years of per-second commits; the
-    * pack is monotone in each head, so `maxOption` over commit epochs
-    * keeps meaning "latest applied".
-    */
-  private val VBits = 31
-  private def packVersions(f: Long, d: Long): Long = {
-    require(f >= 0 && f < (1L << VBits) && d >= 0 && d < (1L << VBits),
-      s"join view: versions out of packable range: fact=$f dim=$d")
-    (f << VBits) | d
-  }
-  private def unpackVersions(e: Long): (Long, Long) =
-    (e >> VBits, e & ((1L << VBits) - 1))
-
-  /** Advance a JOIN view to both sources' heads. Same exactly-once
-    * contract as [[refreshDir]] (runId = view identity, epoch = packed
-    * source versions). Returns groups written (0 = already current).
-    */
-  def refreshJoinDir(
-      spark: SparkSession,
-      factDir: String,
-      factKey: String,
-      dimDir: String,
-      dimKey: String,
-      fk: String,
-      pk: String,
-      mvDir: String,
-      groupCols: Seq[String],
-      aggs: Seq[Agg],
-      mode: String): Long = {
-    require(mode == "algebraic" || mode == "rescan",
-      s"materialized view: unknown mode '$mode' (algebraic | rescan)")
-    val groupCsv = groupCols.mkString(",")
-    val joinLine = Seq("join", mvDir, factDir, factKey, dimDir, dimKey,
-      fk, pk, groupCsv, aggsSpecOf(aggs), mode).mkString("\t")
-    registerDependent(spark, factDir, mvDir, joinLine)
-    registerDependent(spark, dimDir, mvDir, joinLine)
-    recordSources(spark, mvDir, Seq(factDir, dimDir))
-    val runId = mvRunId(mvDir)
-    val (fHead, dHead) = (
-      MergeSink.lastCommit(spark, factDir).map(_.version),
-      MergeSink.lastCommit(spark, dimDir).map(_.version)) match {
-      case (Some(f), Some(dv)) => (f, dv)
-      case _ => return 0L // a side unborn: nothing joinable yet
-    }
-    val packed = packVersions(fHead, dHead)
-    val applied = MergeSink.commits(spark, mvDir)
-      .filter(_.runId == runId).map(_.epoch).maxOption
-    if (applied.contains(packed)) return 0L
-
-    // the needed columns and which side serves each (must be unique)
-    val needed = (groupCols ++
-      expand(aggs).map(_.input).filter(_ != "*")).distinct
-    def joinedCurrentOpt: Option[DataFrame] = for {
-      f <- MergeSink.currentState(spark, factDir)
-      dm <- MergeSink.currentState(spark, dimDir)
-    } yield selectSides(f.as("f").join(dm.as("dm"),
-      col(s"f.$fk") === col(s"dm.$pk"), "inner"), f, dm, needed, Nil)
-    def fullRebuild(): Long = joinedCurrentOpt match {
-      case None => 0L // a side holds no live rows yet: nothing to join
-      case Some(j) =>
-        val full = fullAggregate(j, groupCols, aggs)
-          .withColumn(RefreshCol, lit(packed))
-        MergeSink.overwriteBatch(
-          full, mvDir, groupCsv, RefreshCol, epochId = packed, runId = runId)
-        MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L)
-    }
-
-    applied match {
-      case Some(prev) =>
-        val (f0, d0) = unpackVersions(prev)
-        val retainedF = MergeSink.commits(spark, factDir)
-          .exists(_.version == f0)
-        val retainedD = MergeSink.commits(spark, dimDir)
-          .exists(_.version == d0)
-        if (!retainedF || !retainedD) return fullRebuild()
-        val dF = if (f0 == fHead) None
-          else MergeSink.changeDelta(spark, factDir, factKey, f0, fHead)
-        val dD = if (d0 == dHead) None
-          else MergeSink.changeDelta(spark, dimDir, dimKey, d0, dHead)
-        val parts = Seq.newBuilder[DataFrame]
-        dF.foreach { df =>
-          // ΔF ⋈ D' — mult rides the fact delta. D' is PINNED to the
-          // dim head this refresh RECORDS (stateAt, not currentState):
-          // a dim commit landing mid-refresh must not be absorbed now
-          // and then re-applied by the next refresh's Δdim. An empty
-          // dim side makes the inner join empty — contribute nothing.
-          MergeSink.stateAt(spark, dimDir, dHead).foreach { dimNew =>
-            parts += selectSides(
-              df.as("f").join(dimNew.as("dm"),
-                col(s"f.$fk") === col(s"dm.$pk"), "inner"),
-              df, dimNew, needed, Seq(col("f.__mult").as("__mult")))
-          }
-        }
-        dD.foreach { dd =>
-          // F@f0 ⋈ ΔD — mult rides the dim delta; the fact side is the
-          // OLD snapshot (time travel), exactly the algebra's F term.
-          // An empty old fact makes the inner join empty — skip.
-          MergeSink.stateAt(spark, factDir, f0).foreach { factOld =>
-            parts += selectSides(
-              factOld.as("f").join(dd.as("dm"),
-                col(s"f.$fk") === col(s"dm.$pk"), "inner"),
-              factOld, dd, needed, Seq(col("dm.__mult").as("__mult")))
-          }
-        }
-        val deltas = parts.result()
-        if (deltas.isEmpty) {
-          // metadata-only movement on both sides: record the applied
-          // heads with an empty idempotent commit
-          MergeSink.currentState(spark, mvDir).foreach(st =>
-            MergeSink.upsertBatch(
-              st.limit(0), mvDir, groupCsv, RefreshCol,
-              epochId = packed, runId = runId))
-          return 0L
-        }
-        val delta0 = deltas.reduce(_ unionByName _)
-        // for join views the delta IS the delta-join — materialize once
-        // when the retraction probe adds a second consumer
-        val delta =
-          if (mode == "algebraic" && hasMinMax(aggs))
-            delta0.localCheckpoint()
-          else delta0
-        mode match {
-          case "algebraic"
-              if hasMinMax(aggs) && {
-                val retracting = delta
-                  .filter(col("__mult") < 0).limit(1).count() > 0
-                if (retracting) minmaxRescanCount.incrementAndGet()
-                else minmaxFoldCount.incrementAndGet()
-                retracting
-              } =>
-            refreshRescan(
-              spark, delta,
-              joinedCurrentOpt.getOrElse(delta.drop("__mult").limit(0)),
-              mvDir, groupCols, aggs, groupCsv, packed, runId)
-          case "algebraic" => refreshAlgebraic(
-            spark, delta, mvDir, groupCols, aggs, groupCsv, packed, runId)
-          case "rescan" => refreshRescan(
-            spark, delta,
-            joinedCurrentOpt.getOrElse(delta.drop("__mult").limit(0)),
-            mvDir, groupCols, aggs, groupCsv, packed, runId)
-        }
-      case None => fullRebuild()
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // STAR VIEWS: one fact ⋈ N dims. The delta algebra telescopes —
-  // advancing the vector (a0, a1, …, an) to the heads (h0, h1, …, hn)
-  // is N+1 SEQUENTIAL single-source passes, each the two-table
-  // discipline refreshJoinDir already implements: pass i applies
-  // Δsource_i ⋈ (every other source PINNED at its currently-applied
-  // version) and commits with a PER-SOURCE writer id whose epoch is
-  // source i's new head. Each pass is independently exactly-once (the
-  // watermark lives in the commit log, per source — no out-of-band
-  // state), a crash between passes leaves a consistent mixed cut that
-  // the next refresh completes, and no bit-packing caps how many
-  // versions any source may mint.
-  // ------------------------------------------------------------------
-
-  /** One dimension of a star view: its table dir, merge key, and the
-    * fact-side / dim-side join columns.
-    */
-  final case class StarDim(dir: String, key: String, fk: String, pk: String)
-
-  /** The star view's applied-version vector rides the commit artifact
-    * itself — a `W mvv <v0>,<v1>,…` manifest note under the view's ONE
-    * writer id, with `epoch = Σ versions` (strictly monotone: every
-    * pass advances one component). The NEWEST commit therefore always
-    * carries the whole vector, so no retention setting can age a
-    * watermark out from under the view.
-    */
-  private def starNote(vs: Seq[Long]): String = "mvv " + vs.mkString(",")
-
-  private def starVector(
-      spark: SparkSession, mvDir: String, runId: String): Option[Seq[Long]] =
-    MergeSink.commits(spark, mvDir).filter(_.runId == runId).lastOption
-      .flatMap(c => MergeSink.manifestNote(spark, mvDir, c.version))
-      .filter(_.startsWith("mvv "))
-      .map(_.stripPrefix("mvv ").split(',').toSeq.map(_.trim.toLong))
-
-  /** `dir,key,fk,pk;dir,key,fk,pk` — the registration-line encoding. */
-  private[graft] def parseStarDims(spec: String): Seq[StarDim] =
-    spec.split(';').toSeq.map(_.split(',') match {
-      case Array(d, k, fk, pk) => StarDim(d, k, fk, pk)
-      case other => throw new IllegalArgumentException(
-        s"star view: bad dim spec '${other.mkString(",")}'")
-    })
-
-  /** Advance a STAR view (fact ⋈ dims) to every source's head. Returns
-    * groups written across all passes (0 = already current everywhere).
-    */
-  def refreshStarDir(
-      spark: SparkSession,
-      factDir: String,
-      factKey: String,
-      dims: Seq[StarDim],
-      mvDir: String,
-      groupCols: Seq[String],
-      aggs: Seq[Agg],
-      mode: String): Long = {
-    require(mode == "algebraic" || mode == "rescan",
-      s"materialized view: unknown mode '$mode' (algebraic | rescan)")
-    require(dims.nonEmpty, "star view: at least one dimension")
-    val groupCsv = groupCols.mkString(",")
-    val starLine = Seq("star", mvDir, factDir, factKey,
+    val line = Seq("star", mvDir, srcDir, srcKey,
       dims.map(d => s"${d.dir},${d.key},${d.fk},${d.pk}").mkString(";"),
       groupCsv, aggsSpecOf(aggs), mode).mkString("\t")
-    val srcDirs = factDir +: dims.map(_.dir)
-    val srcKeys = factKey +: dims.map(_.key)
-    srcDirs.foreach(d => registerDependent(spark, d, mvDir, starLine))
-    recordSources(spark, mvDir, srcDirs, star = true)
+    val srcDirs = srcDir +: dims.map(_.dir)
+    val srcKeys = srcKey +: dims.map(_.key)
+    srcDirs.foreach(d => registerDependent(spark, d, mvDir, line))
+    recordSources(spark, mvDir, srcDirs)
     val heads: Seq[Long] = srcDirs.map(d =>
       MergeSink.lastCommit(spark, d).map(_.version) match {
         case Some(v) => v
-        case None => return 0L // a side unborn: nothing joinable yet
+        case None => return 0L // a source unborn: nothing to materialize
       })
     val runId = mvRunId(mvDir)
     val appliedVec: Option[Seq[Long]] =
-      starVector(spark, mvDir, runId).filter(_.size == srcDirs.size)
+      appliedVector(spark, mvDir, runId).filter(_.size == srcDirs.size)
     if (appliedVec.contains(heads)) return 0L
 
     val needed = (groupCols ++
@@ -750,9 +476,9 @@ object MaterializedViews {
         colSets.zipWithIndex.filter(_._1.contains(c)) match {
           case Seq((_, i)) => col(s"s$i.$c").as(c)
           case Seq() => throw new IllegalArgumentException(
-            s"star view: column '$c' exists on NO side")
+            s"materialized view: column '$c' exists on NO side")
           case many => throw new IllegalArgumentException(
-            s"star view: column '$c' exists on sides " +
+            s"materialized view: column '$c' exists on sides " +
               s"${many.map(_._2).mkString(",")} — rename (view columns " +
               "must be unambiguous)")
         }
@@ -761,36 +487,32 @@ object MaterializedViews {
       joined.select(picks ++ extra: _*)
     }
 
-    def statesAt(vs: Seq[Long]): Option[Seq[DataFrame]] = {
-      val sts = srcDirs.zip(vs).map { case (d, v) =>
-        MergeSink.stateAt(spark, d, v)
-      }
-      if (sts.forall(_.isDefined)) Some(sts.map(_.get)) else None
-    }
-
+    // record an advanced vector whose passes wrote nothing
     def emptyAdvance(target: Seq[Long]): Unit =
       MergeSink.currentState(spark, mvDir).foreach(st =>
         MergeSink.upsertBatch(st.limit(0), mvDir, groupCsv, RefreshCol,
           epochId = target.sum, runId = runId,
-          note = Some(starNote(target))))
+          note = Some(vectorNote(target))))
 
     def fullRebuild(): Long = {
-      val joinedOpt = srcDirs.zipWithIndex
-        .map { case (d, _) => MergeSink.currentState(spark, d) } match {
-        case sts if sts.forall(_.isDefined) =>
-          Some(joinStar(sts.map(_.get), None))
-        case _ => None
+      // every source at the head this commit RECORDS (a commit landing
+      // mid-refresh must not be absorbed now and re-applied next time)
+      val sts = srcDirs.zip(heads).map { case (d, h) =>
+        MergeSink.stateAt(spark, d, h)
       }
-      joinedOpt match {
-        case None => 0L // a side holds no live rows yet
-        case Some(j) =>
-          val full = fullAggregate(j, groupCols, aggs)
-            .withColumn(RefreshCol, lit(heads.sum))
-          MergeSink.overwriteBatch(
-            full, mvDir, groupCsv, RefreshCol,
-            epochId = heads.sum, runId = runId,
-            note = Some(starNote(heads)))
-          MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L)
+      // a source without live rows empties the join: only a view that
+      // still holds rows has anything to overwrite
+      val full =
+        if (sts.forall(_.isDefined))
+          Some(fullAggregate(joinStar(sts.map(_.get), None), groupCols, aggs)
+            .withColumn(RefreshCol, lit(heads.sum)))
+        else MergeSink.currentState(spark, mvDir).map(_.limit(0))
+      full.fold(0L) { f =>
+        MergeSink.overwriteBatch(
+          f, mvDir, groupCsv, RefreshCol,
+          epochId = heads.sum, runId = runId,
+          note = Some(vectorNote(heads)))
+        MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L)
       }
     }
 
@@ -805,80 +527,60 @@ object MaterializedViews {
     var written = 0L
     srcDirs.indices.foreach { i =>
       if (cur(i) != heads(i)) {
-        val h = heads(i)
-        val target = cur.updated(i, h)
-        MergeSink.changeDelta(spark, srcDirs(i), srcKeys(i), cur(i), h) match {
-          case None => emptyAdvance(target) // metadata-only movement
-          case Some(delta) =>
-            // every OTHER source pinned at its current working version
-            // (earlier passes already advanced theirs — the telescoping
-            // term Δi ⋈ ⨝_{j<i} Sj@head ⋈ ⨝_{j>i} Sj@applied)
-            val others = statesAt(target)
-            others match {
-              case None =>
-                // a pinned side holds no live rows: the inner join is
-                // empty — advance the watermark with an empty commit
-                emptyAdvance(target)
-              case Some(sts) =>
-                val delta0 = joinStar(sts.updated(i, delta), Some(i))
-                val d =
-                  if (mode == "algebraic" && hasMinMax(aggs))
-                    delta0.localCheckpoint()
-                  else delta0
-                val rescan = mode == "rescan" ||
-                  (hasMinMax(aggs) && {
-                    val retracting =
-                      d.filter(col("__mult") < 0).limit(1).count() > 0
-                    if (retracting) minmaxRescanCount.incrementAndGet()
-                    else minmaxFoldCount.incrementAndGet()
-                    retracting
-                  })
-                written +=
-                  (if (rescan)
-                    refreshRescan(
-                      spark, d,
-                      // sts IS the pinned target-vector state (we are
-                      // inside its Some) — the full star join at the
-                      // versions this pass records
-                      joinStar(sts, None),
-                      mvDir, groupCols, aggs, groupCsv, target.sum,
-                      runId, note = Some(starNote(target)))
-                  else
-                    refreshAlgebraic(
-                      spark, d, mvDir, groupCols, aggs, groupCsv,
-                      target.sum, runId, note = Some(starNote(target))))
-            }
+        val target = cur.updated(i, heads(i))
+        // every OTHER source pinned at its working version (earlier
+        // passes already advanced theirs — the telescoping term
+        // Δi ⋈ ⨝_{j<i} Sj@head ⋈ ⨝_{j>i} Sj@applied)
+        val pinned = srcDirs.indices.map(j =>
+          if (j == i) None else MergeSink.stateAt(spark, srcDirs(j), target(j)))
+        val othersLive =
+          srcDirs.indices.forall(j => j == i || pinned(j).isDefined)
+        MergeSink.changeDelta(
+            spark, srcDirs(i), srcKeys(i), cur(i), heads(i)) match {
+          case Some(delta) if othersLive =>
+            val frames = pinned.updated(i, Some(delta)).map(_.get)
+            val delta0 = joinStar(frames, Some(i))
+            // the retraction probe is a SECOND consumer of the delta —
+            // materialize once so probe + refresh share the blocks
+            val d =
+              if (mode == "algebraic" && hasMinMax(aggs))
+                delta0.localCheckpoint()
+              else delta0
+            // min/max fold only over an insert-only range: a retraction
+            // could remove the stored extremum, which no fold can undo —
+            // those ranges rescan the touched groups instead
+            val rescan = mode == "rescan" ||
+              (hasMinMax(aggs) && {
+                val retracting =
+                  d.filter(col("__mult") < 0).limit(1).count() > 0
+                if (retracting) minmaxRescanCount.incrementAndGet()
+                else minmaxFoldCount.incrementAndGet()
+                retracting
+              })
+            written +=
+              (if (rescan) {
+                // the full join at the vector this pass records; a
+                // source emptied at its head empties it (every touched
+                // group vanishes)
+                val atTarget =
+                  MergeSink.stateAt(spark, srcDirs(i), heads(i)) match {
+                    case Some(si) => joinStar(frames.updated(i, si), None)
+                    case None => d.drop("__mult").limit(0)
+                  }
+                refreshRescan(spark, d, atTarget, mvDir, groupCols, aggs,
+                  groupCsv, target, runId)
+              } else
+                refreshAlgebraic(spark, d, mvDir, groupCols, aggs, groupCsv,
+                  target, runId))
+          case _ =>
+            // metadata-only movement, or a pinned side holds no live
+            // rows (the inner join is empty): advance the watermark
+            emptyAdvance(target)
         }
         cur = target
       }
     }
     written
-  }
-
-  /** Qualified projection of the join: each needed column must live on
-    * exactly ONE side — ambiguity rejects at refresh time, loudly.
-    */
-  private def selectSides(
-      joined: DataFrame,
-      fact: DataFrame,
-      dim: DataFrame,
-      needed: Seq[String],
-      extra: Seq[Column]): DataFrame = {
-    val fCols = fact.columns.toSet - "__mult"
-    val dCols = dim.columns.toSet - "__mult"
-    val picks = needed.map { c =>
-      (fCols.contains(c), dCols.contains(c)) match {
-        case (true, false) => col(s"f.$c").as(c)
-        case (false, true) => col(s"dm.$c").as(c)
-        case (true, true) => throw new IllegalArgumentException(
-          s"join view: column '$c' exists on BOTH sides — rename one " +
-            "(view columns must be unambiguous)")
-        case _ => throw new IllegalArgumentException(
-          s"join view: column '$c' exists on NEITHER side " +
-            s"(fact: ${fCols.mkString(",")}; dim: ${dCols.mkString(",")})")
-      }
-    }
-    joined.select(picks ++ extra: _*)
   }
 
   /** Fold the retraction delta into the stored aggregates: one grouped
@@ -893,10 +595,8 @@ object MaterializedViews {
       groupCols: Seq[String],
       aggs0: Seq[Agg],
       groupCsv: String,
-      srcHead: Long,
-      runId: String,
-      reRegister: Boolean = false,
-      note: Option[String] = None): Long = {
+      target: Seq[Long],
+      runId: String): Long = {
     val mvStored = MergeSink.currentState(spark, mvDir)
     // fold the stored (self-maintainable) parts. A view MATERIALIZED
     // BEFORE the sum-companion format lacks the hidden __<alias>_nn
@@ -959,15 +659,15 @@ object MaterializedViews {
       (groupCols.map(col) ++
         aggs.map(a => foldedAgg(a).as(a.alias)) :+
         foldedN.cast(LongType).as(RowCountCol) :+
-        lit(srcHead).as(RefreshCol) :+
+        lit(target.sum).as(RefreshCol) :+
         (foldedN === 0L).as(MergeSink.DeletedCol)): _*)
       // derived quotients recompute from the freshly-folded parts
       .select((col("*") +: derived(aggs0)): _*)
       .localCheckpoint() // computed once: the report count AND the commit
     val written = out.count() // O(changed groups) — the refresh's report
     MergeSink.upsertBatch(
-      out, mvDir, groupCsv, RefreshCol, epochId = srcHead, runId = runId,
-      reRegister = reRegister, note = note)
+      out, mvDir, groupCsv, RefreshCol, epochId = target.sum, runId = runId,
+      note = Some(vectorNote(target)))
     written
   }
 
@@ -982,10 +682,8 @@ object MaterializedViews {
       groupCols: Seq[String],
       aggs: Seq[Agg],
       groupCsv: String,
-      srcHead: Long,
-      runId: String,
-      reRegister: Boolean = false,
-      note: Option[String] = None): Long = {
+      target: Seq[Long],
+      runId: String): Long = {
     val touched = delta.select(groupCols.map(col): _*).distinct()
     val recomputed = fullAggregate(
       srcState.join(touched, groupCols, "left_semi"), groupCols, aggs)
@@ -999,12 +697,12 @@ object MaterializedViews {
     val out = recomputed
       .withColumn(MergeSink.DeletedCol, lit(false))
       .unionByName(vanished.withColumn(MergeSink.DeletedCol, lit(true)))
-      .withColumn(RefreshCol, lit(srcHead))
+      .withColumn(RefreshCol, lit(target.sum))
       .localCheckpoint() // computed once: the report count AND the commit
     val written = out.count()
     MergeSink.upsertBatch(
-      out, mvDir, groupCsv, RefreshCol, epochId = srcHead, runId = runId,
-      reRegister = reRegister, note = note)
+      out, mvDir, groupCsv, RefreshCol, epochId = target.sum, runId = runId,
+      note = Some(vectorNote(target)))
     written
   }
 
@@ -1044,6 +742,34 @@ object MaterializedViews {
           StructField(RefreshCol, LongType)))
   }
 
+  /** `db.d1:fk1=pk1;db.d2:fk2=pk2` → (dim ident, fact fk, dim pk) per
+    * dim — the `graft.mv.dims` encoding (empty for a single-table view).
+    */
+  private[sources] def parseDimsSpec(spec: String): Seq[(String, String, String)] =
+    spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { s =>
+      s.split(':') match {
+        case Array(ident, on) => on.split('=') match {
+          case Array(fk, pk) => (ident.trim, fk.trim, pk.trim)
+          case _ => throw new IllegalArgumentException(
+            s"materialized view: bad join spec '$on' (want 'fact_fk=dim_pk')")
+        }
+        case _ => throw new IllegalArgumentException(
+          s"materialized view: bad dim spec '$s' (want 'db.dim:fk=pk')")
+      }
+    }
+
+  /** The definition keys a view persists; any other `graft.mv.*` key
+    * belongs to a definition this driver cannot read.
+    */
+  private val DefinitionKeys = Set("graft.mv.source", "graft.mv.dims",
+    "graft.mv.group", "graft.mv.aggs", "graft.mv.mode")
+
+  /** Define a view in the catalog — the grouped aggregate of `srcIdent`
+    * inner-joined to `dims` (db.dim, fact_fk, dim_pk) — persist the
+    * definition as `graft.mv.*` table properties, and run its first
+    * (full) refresh. Backs `create_mv` (no dims), `create_mv_join`
+    * (one) and `create_mv_star` (any number).
+    */
   private[sources] def create(
       spark: SparkSession,
       cat: GraftCatalog,
@@ -1051,13 +777,19 @@ object MaterializedViews {
       srcIdent: String,
       groupCols: Seq[String],
       aggs: Seq[Agg],
-      mode: String): Long = {
+      mode: String,
+      dims: Seq[(String, String, String)] = Nil): Long = {
     require(mode == "algebraic" || mode == "rescan",
       s"create_mv: unknown mode '$mode' (algebraic | rescan)")
-    val srcOpts = cat.tableOptions(identOf(srcIdent))
-    val srcSchema = DataType.fromJson(srcOpts("schema"))
-      .asInstanceOf[StructType]
-    val schema = mvSchema(srcSchema, groupCols, aggs)
+    def schemaOf(ident: String): StructType =
+      DataType.fromJson(cat.tableOptions(identOf(ident))("schema"))
+        .asInstanceOf[StructType]
+    // each view column resolves on the first side that has it
+    val joint = dims.foldLeft(schemaOf(srcIdent)) { case (acc, (ident, _, _)) =>
+      StructType(acc.fields ++
+        schemaOf(ident).fields.filterNot(f => acc.fieldNames.contains(f.name)))
+    }
+    val schema = mvSchema(joint, groupCols, aggs)
     val P = org.apache.spark.sql.connector.catalog.TableCatalog.OPTION_PREFIX
     val props = new java.util.HashMap[String, String]()
     props.put("key", groupCols.mkString(","))
@@ -1065,116 +797,10 @@ object MaterializedViews {
     // OPTION_PREFIX: createTable persists (and tableOptions returns)
     // prefixed options as bare-keyed table properties
     props.put(P + "graft.mv.source", srcIdent)
-    props.put(P + "graft.mv.group", groupCols.mkString(","))
-    props.put(P + "graft.mv.aggs",
-      aggs.map(a => s"${a.alias}=${a.kind}:${a.input}").mkString(","))
-    props.put(P + "graft.mv.mode", mode)
-    cat.createTable(identOf(mvIdent), schema,
-      Array.empty[org.apache.spark.sql.connector.expressions.Transform],
-      props)
-    refresh(spark, cat, mvIdent)
-  }
-
-  /** Define a JOIN view in the catalog: `CALL cat.sys.create_mv_join
-    * ('db.mv', 'db.fact', 'db.dim', 'fk=pk', 'grp', 'total=sum:cents',
-    * 'algebraic')`. Persists the two-table definition as `graft.mv.*`
-    * properties and runs the first (full) refresh.
-    */
-  private[sources] def createJoin(
-      spark: SparkSession,
-      cat: GraftCatalog,
-      mvIdent: String,
-      factIdent: String,
-      dimIdent: String,
-      on: String,
-      groupCols: Seq[String],
-      aggs: Seq[Agg],
-      mode: String): Long = {
-    require(mode == "algebraic" || mode == "rescan",
-      s"create_mv_join: unknown mode '$mode' (algebraic | rescan)")
-    val (fk, pk) = on.split('=') match {
-      case Array(a, b) => (a.trim, b.trim)
-      case _ => throw new IllegalArgumentException(
-        s"create_mv_join: bad join spec '$on' (want 'fact_fk=dim_pk')")
-    }
-    val factOpts = cat.tableOptions(identOf(factIdent))
-    val dimOpts = cat.tableOptions(identOf(dimIdent))
-    val factSchema = DataType.fromJson(factOpts("schema"))
-      .asInstanceOf[StructType]
-    val dimSchema = DataType.fromJson(dimOpts("schema"))
-      .asInstanceOf[StructType]
-    // resolve each view column on exactly one side
-    val joint = StructType(factSchema.fields ++
-      dimSchema.fields.filterNot(f =>
-        factSchema.fieldNames.contains(f.name)))
-    val schema = mvSchema(joint, groupCols, aggs)
-    val P = org.apache.spark.sql.connector.catalog.TableCatalog.OPTION_PREFIX
-    val props = new java.util.HashMap[String, String]()
-    props.put("key", groupCols.mkString(","))
-    props.put("seq", RefreshCol)
-    props.put(P + "graft.mv.source", factIdent)
-    props.put(P + "graft.mv.dim", dimIdent)
-    props.put(P + "graft.mv.on", s"$fk=$pk")
-    props.put(P + "graft.mv.group", groupCols.mkString(","))
-    props.put(P + "graft.mv.aggs",
-      aggs.map(a => s"${a.alias}=${a.kind}:${a.input}").mkString(","))
-    props.put(P + "graft.mv.mode", mode)
-    cat.createTable(identOf(mvIdent), schema,
-      Array.empty[org.apache.spark.sql.connector.expressions.Transform],
-      props)
-    refresh(spark, cat, mvIdent)
-  }
-
-  /** Define a STAR view in the catalog: `CALL cat.sys.create_mv_star
-    * ('db.mv', 'db.fact', 'db.d1:fk1=pk1;db.d2:fk2=pk2', 'grp',
-    * 'total=sum:cents', 'algebraic')` — one fact ⋈ N dims maintained
-    * by per-source delta-join IVM ([[refreshStarDir]]).
-    */
-  private[sources] def createStar(
-      spark: SparkSession,
-      cat: GraftCatalog,
-      mvIdent: String,
-      factIdent: String,
-      dimsSpec: String,
-      groupCols: Seq[String],
-      aggs: Seq[Agg],
-      mode: String): Long = {
-    require(mode == "algebraic" || mode == "rescan",
-      s"create_mv_star: unknown mode '$mode' (algebraic | rescan)")
-    val dims = dimsSpec.split(';').toSeq.map(_.trim).filter(_.nonEmpty)
-      .map { s =>
-        s.split(':') match {
-          case Array(ident, on) => on.split('=') match {
-            case Array(fk, pk) => (ident.trim, fk.trim, pk.trim)
-            case _ => throw new IllegalArgumentException(
-              s"create_mv_star: bad join spec '$on' (want 'fk=pk')")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"create_mv_star: bad dim spec '$s' (want 'db.dim:fk=pk')")
-        }
-      }
-    require(dims.nonEmpty, "create_mv_star: at least one dimension")
-    val factOpts = cat.tableOptions(identOf(factIdent))
-    val factSchema = DataType.fromJson(factOpts("schema"))
-      .asInstanceOf[StructType]
-    val joint = dims.foldLeft(factSchema) { case (acc, (ident, _, _)) =>
-      val ds = DataType.fromJson(
-        cat.tableOptions(identOf(ident))("schema"))
-        .asInstanceOf[StructType]
-      StructType(acc.fields ++
-        ds.fields.filterNot(f => acc.fieldNames.contains(f.name)))
-    }
-    val schema = mvSchema(joint, groupCols, aggs)
-    val P = org.apache.spark.sql.connector.catalog.TableCatalog.OPTION_PREFIX
-    val props = new java.util.HashMap[String, String]()
-    props.put("key", groupCols.mkString(","))
-    props.put("seq", RefreshCol)
-    props.put(P + "graft.mv.source", factIdent)
     props.put(P + "graft.mv.dims",
       dims.map { case (i, fk, pk) => s"$i:$fk=$pk" }.mkString(";"))
     props.put(P + "graft.mv.group", groupCols.mkString(","))
-    props.put(P + "graft.mv.aggs",
-      aggs.map(a => s"${a.alias}=${a.kind}:${a.input}").mkString(","))
+    props.put(P + "graft.mv.aggs", aggsSpecOf(aggs))
     props.put(P + "graft.mv.mode", mode)
     cat.createTable(identOf(mvIdent), schema,
       Array.empty[org.apache.spark.sql.connector.expressions.Transform],
@@ -1191,46 +817,31 @@ object MaterializedViews {
       throw new IllegalArgumentException(
         s"refresh_mv: '$mvIdent' is not a materialized view " +
           "(no graft.mv.source property)"))
+    val unknown = mvOpts.keySet.filter(_.startsWith("graft.mv.")) -- DefinitionKeys
+    require(unknown.isEmpty,
+      s"refresh_mv: '$mvIdent' carries unsupported definition properties " +
+        s"${unknown.toSeq.sorted.mkString(", ")} — drop and re-create the view")
     val srcOpts = cat.tableOptions(identOf(srcIdent))
-    val groupCols = mvOpts("graft.mv.group").split(',').toSeq.map(_.trim)
-    val aggs = parseAggs(mvOpts("graft.mv.aggs"))
-    val mode = mvOpts.getOrElse("graft.mv.mode", "algebraic")
-    mvOpts.get("graft.mv.dims").foreach { dimsSpec =>
-      val dims = dimsSpec.split(';').toSeq.map { s =>
-        val Array(ident, on) = s.split(':')
-        val Array(fk, pk) = on.split('=').map(_.trim)
-        val dOpts = cat.tableOptions(identOf(ident.trim))
+    val dims = parseDimsSpec(mvOpts.getOrElse("graft.mv.dims", "")).map {
+      case (ident, fk, pk) =>
+        val dOpts = cat.tableOptions(identOf(ident))
         StarDim(dOpts("path"), dOpts("key"), fk, pk)
-      }
-      return refreshStarDir(
-        spark,
-        factDir = srcOpts("path"), factKey = srcOpts("key"),
-        dims = dims,
-        mvDir = mvOpts("path"),
-        groupCols = groupCols, aggs = aggs, mode = mode)
     }
-    mvOpts.get("graft.mv.dim") match {
-      case Some(dimIdent) =>
-        val dimOpts = cat.tableOptions(identOf(dimIdent))
-        val Array(fk, pk) = mvOpts("graft.mv.on").split('=').map(_.trim)
-        refreshJoinDir(
-          spark,
-          factDir = srcOpts("path"), factKey = srcOpts("key"),
-          dimDir = dimOpts("path"), dimKey = dimOpts("key"),
-          fk = fk, pk = pk,
-          mvDir = mvOpts("path"),
-          groupCols = groupCols, aggs = aggs, mode = mode)
-      case None =>
-        refreshDir(
-          spark,
-          srcDir = srcOpts("path"),
-          srcKey = srcOpts("key"),
-          mvDir = mvOpts("path"),
-          groupCols = groupCols,
-          aggs = aggs,
-          mode = mode)
-    }
+    refreshDir(
+      spark,
+      srcDir = srcOpts("path"),
+      srcKey = srcOpts("key"),
+      mvDir = mvOpts("path"),
+      groupCols = mvOpts("graft.mv.group").split(',').toSeq.map(_.trim),
+      aggs = parseAggs(mvOpts("graft.mv.aggs")),
+      mode = mvOpts.getOrElse("graft.mv.mode", "algebraic"),
+      dims = dims)
   }
+
+  /** Every table a view reads: its source, then each dim. */
+  private[sources] def viewSources(props: String => Option[String]): Seq[String] =
+    props("graft.mv.source").toSeq ++
+      props("graft.mv.dims").toSeq.flatMap(parseDimsSpec).map(_._1)
 
   /** CONTINUOUSLY MAINTAINED VIEW: a streaming sink whose every
     * micro-batch (1) upserts into the source table and (2) advances
@@ -1271,12 +882,12 @@ object MaterializedViews {
         ()
       }
 
-  /** Refresh EVERY materialized view whose `graft.mv.source` names
-    * `srcIdent` (one catalog listing, then per-view [[refresh]] —
-    * each independently exactly-once). Returns (view, groups written).
-    * The post-commit maintenance move: land data, then
-    * `CALL refresh_dependents('db.src')` brings every derived table
-    * to the new head.
+  /** Refresh EVERY materialized view that reads `srcIdent` — as its
+    * source or as one of its dims (one catalog listing, then per-view
+    * [[refresh]] — each independently exactly-once). Returns (view,
+    * groups written). The post-commit maintenance move: land data,
+    * then `CALL refresh_dependents('db.src')` brings every derived
+    * table to the new head.
     */
   private[sources] def refreshDependents(
       spark: SparkSession,
@@ -1290,14 +901,7 @@ object MaterializedViews {
         cat.listTables(ns.toArray).toSeq.flatMap { id =>
           val full = (id.namespace() :+ id.name()).mkString(".")
           val opts = cat.tableOptions(id)
-          // a JOIN view depends on BOTH its fact and its dim; a STAR
-          // view on its fact and EVERY dim
-          val sources =
-            opts.get("graft.mv.source").toSeq ++
-              opts.get("graft.mv.dim") ++
-              opts.get("graft.mv.dims").toSeq
-                .flatMap(_.split(';').map(_.split(':').head.trim))
-          if (sources.exists(s => identKey(s) == want))
+          if (viewSources(opts.get).exists(s => identKey(s) == want))
             Some(full -> refresh(spark, cat, full))
           else None
         }

@@ -1162,7 +1162,7 @@ class GraftMergeScan(
     val recordedRows = resolvedVersion
       .map(v => MergeSink.manifestRows(spark, dir, v))
       .getOrElse(Map.empty[Int, Long])
-    val conf = spark.sessionState.newHadoopConf()
+    lazy val conf = spark.sessionState.newHadoopConf()
     val byBucket = plannedFiles(snapshotFiles).groupBy(_.bucket)
     val bytes = byBucket
       .map { case (b, parts) =>
@@ -1722,7 +1722,7 @@ class GraftMergeMicroBatchStream(
             "up within retention")
     }
     val versions = cs.map(_.version).filter(v => v > s0 && v <= e0)
-    val conf = spark.sessionState.newHadoopConf()
+    lazy val conf = spark.sessionState.newHadoopConf()
     val splits = versions.flatMap { v =>
       val m = MergeSink.manifest(spark, dir, v)
       // a retained marker whose manifest vanished is a torn GC — same

@@ -46,9 +46,9 @@ import graft.streaming.MergeSink
   *     `__n` every view carries). The fact is never read: the rollup
   *     aggregates the O(view groups) answer table.
   *  3. JOIN/STAR: the query is an aggregate over the exact inner
-  *     equi-join graph a maintained join/star view was declared on
-  *     (fact ⋈ dim(s) on fk = pk) — served exact or rolled up, same as
-  *     above. The join itself disappears along with the scan.
+  *     equi-join graph a maintained view was declared on (fact ⋈
+  *     dim(s) on fk = pk) — served exact or rolled up, same as above.
+  *     The join itself disappears along with the scan.
   *
   * At 100 TB the difference is O(groups) read vs O(fact) scan +
   * shuffle (+ join) + aggregate. Every check is metadata-only (sidecar
@@ -156,21 +156,6 @@ object MvRewrite extends Rule[LogicalPlan] {
       MaterializedViews.dependentLines(spark, d)).distinct
     lines.flatMap { line =>
       scala.util.Try(line.split('\t') match {
-        case Array("single", mvDir, _, groupCsv, aggsSpec, _)
-            if rels.size == 1 && conds.isEmpty =>
-          Some(MvDef(
-            mvDir,
-            groupCsv.split(',').toSeq.map(_.trim).filter(_.nonEmpty),
-            MaterializedViews.parseAggs(aggsSpec)))
-        case Array("join", mvDir, fDir, _, dDir, _, fk, pk,
-            groupCsv, aggsSpec, _)
-            if rels.size == 2 && conds.size == 1 &&
-              dirs.toSet == Set(fDir, dDir) &&
-              hasCond(relOf(fDir), fk, relOf(dDir), pk) =>
-          Some(MvDef(
-            mvDir,
-            groupCsv.split(',').toSeq.map(_.trim).filter(_.nonEmpty),
-            MaterializedViews.parseAggs(aggsSpec)))
         case Array("star", mvDir, fDir, _, dimsSpec,
             groupCsv, aggsSpec, _) =>
           val dims = MaterializedViews.parseStarDims(dimsSpec)

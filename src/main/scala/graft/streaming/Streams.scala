@@ -2525,8 +2525,8 @@ object Streams {
       dim, "gid", "drv", 0L, "load")
     val aggs = Seq(MV.Agg("total", "sum", "cents"),
       MV.Agg("n", "count", "*"), MV.Agg("avgc", "avg", "cents"))
-    MV.refreshJoinDir(s, fact, "event_id", dim, "gid", "grp", "gid",
-      mv, Seq("category"), aggs, "algebraic")
+    MV.refreshDir(s, fact, "event_id", mv, Seq("category"), aggs,
+      "algebraic", dims = Seq(MV.StarDim(dim, "gid", "grp", "gid")))
     s.conf.set("spark.graft.mvRewrite", "true")
     try {
       def scanOf(dir: String, key: String, seq: String) =
@@ -2851,11 +2851,11 @@ object Streams {
 
   // ---------------------------------------------------------------------
   // q_mv_join — MATERIALIZED VIEW OVER A STAR JOIN, maintained by
-  // delta-join IVM (ΔF⋈D' ∪ F@old⋈ΔD over the retraction streams,
-  // MaterializedViews.refreshJoinDir): the event ledger is the fact
-  // (reusing the q_mv_* v0/v1 load shapes incl. the NULL-cents lane),
-  // a 97-row gid→category dim is the dimension, and the view holds
-  // sum + count + the DERIVED avg per category. Day 2 changes BOTH
+  // delta-join IVM (one pass per moved side over the retraction
+  // streams, MaterializedViews.refreshDir with one dim): the event
+  // ledger is the fact (reusing the q_mv_* v0/v1 load shapes incl. the
+  // NULL-cents lane), a 97-row gid→category dim is the dimension, and
+  // the view holds sum + count + the DERIVED avg per category. Day 2 changes BOTH
   // sides — fact inserts/updates/deletes confined to grp % 5 = 0
   // (≤ 2 of the 10 categories, cost bound REQUIREd) and a dim
   // recategorization + dim-row deletion (≤ 3 categories) — and the
@@ -2878,9 +2878,9 @@ object Streams {
       dim, "gid", "drv", 0L, "load")
     val aggs = Seq(MV.Agg("total", "sum", "cents"),
       MV.Agg("n", "count", "*"), MV.Agg("avgc", "avg", "cents"))
-    def refresh(): Long = MV.refreshJoinDir(
-      s, fact, "event_id", dim, "gid", "grp", "gid",
-      mv, Seq("category"), aggs, "algebraic")
+    def refresh(): Long = MV.refreshDir(
+      s, fact, "event_id", mv, Seq("category"), aggs, "algebraic",
+      dims = Seq(MV.StarDim(dim, "gid", "grp", "gid")))
     val g0 = refresh()
     require(g0 >= 3, s"initial join materialization too small: $g0")
     // day 2a: FACT side — the shared v1 shape (grp % 5 = 0 only)
@@ -2922,11 +2922,11 @@ object Streams {
   // ---------------------------------------------------------------------
   // q_mv_star — MATERIALIZED VIEW OVER A MULTI-DIM STAR (one fact ⋈
   // TWO dims), maintained by per-source delta-join IVM
-  // (MaterializedViews.refreshStarDir): the delta algebra telescopes
-  // into one single-source pass per moved source — Δsource ⋈ every
-  // other side PINNED at its applied version — each pass exactly-once
-  // under its own per-source watermark (no bit-packed version vector,
-  // no out-of-band state). Day 2 moves ALL THREE sources (the shared
+  // (MaterializedViews.refreshDir with two dims): the delta algebra
+  // telescopes into one single-source pass per moved source — Δsource
+  // ⋈ every other side PINNED at its working version — each pass
+  // exactly-once under the view's version-vector watermark (no
+  // bit-packed versions, no out-of-band state). Day 2 moves ALL THREE sources (the shared
   // fact v1 shape incl. the NULL-cents lane, a dim-1 recategorize +
   // delete, a dim-2 rezone + delete) and the gate REQUIREs each
   // refresh wrote only the touched (category, zone) groups. Oracle:
@@ -2957,9 +2957,9 @@ object Streams {
     val dims = Seq(
       MV.StarDim(dim1, "gid", "grp", "gid"),
       MV.StarDim(dim2, "sid", "site", "sid"))
-    def refresh(): Long = MV.refreshStarDir(
-      s, fact, "event_id", dims, mv, Seq("category", "zone"),
-      aggs, "algebraic")
+    def refresh(): Long = MV.refreshDir(
+      s, fact, "event_id", mv, Seq("category", "zone"), aggs, "algebraic",
+      dims = dims)
     val g0 = refresh()
     require(g0 >= 6, s"initial star materialization too small: $g0")
     // day 2a: FACT — the shared v1 shape (grp % 5 = 0 -> categories

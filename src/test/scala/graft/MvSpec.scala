@@ -289,9 +289,9 @@ class MvSpec extends SparkSpec {
         .collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
           r.getDouble(3)))).toMap
-    def refresh(): Long = MaterializedViews.refreshJoinDir(
-      spark, fact, "id", dim, "gid", "gid", "gid",
-      mv, Seq("cat"), aggs, "algebraic")
+    def refresh(): Long = MaterializedViews.refreshDir(
+      spark, fact, "id", mv, Seq("cat"), aggs, "algebraic",
+      dims = Seq(MaterializedViews.StarDim(dim, "gid", "gid", "gid")))
     // wait: fk and pk share the name 'gid' -> ambiguous on the view
     // columns? no — 'gid' is not a view column (group is 'cat')
     assert(refresh() == 2L) // cats a, b
@@ -472,8 +472,8 @@ class MvSpec extends SparkSpec {
     val dims = Seq(
       MV.StarDim(d1, "k1", "k1", "k1"), MV.StarDim(d2, "k2", "k2", "k2"))
     val aggs = Seq(MV.Agg("total", "sum", "v"), MV.Agg("n", "count", "*"))
-    def refresh(): Long = MV.refreshStarDir(
-      spark, fact, "id", dims, mv, Seq("w1"), aggs, "algebraic")
+    def refresh(): Long = MV.refreshDir(
+      spark, fact, "id", mv, Seq("w1"), aggs, "algebraic", dims = dims)
     assert(refresh() > 0, "initial star materialization")
     // day 2: the fact AND one dim move — two passes pending
     MS.upsertBatch(factRows(0 until 10, 1000, 2), fact, "id", "rv", 1L, "w")
@@ -664,5 +664,112 @@ class MvSpec extends SparkSpec {
     // both at head: the next call still succeeds, each view a no-op
     assert(spark.sql(s"CALL $cat.sys.refresh_dependents('m.src')")
       .head().getInt(0) == 2)
+  }
+
+  test("emptying the fact (and a dim) retracts every group at 0, 1 and 2 dims") {
+    val s = spark
+    import s.implicits._
+    Seq(0, 1, 2).foreach { nDims =>
+      val fact = tmp(s"mv_trunc_f$nDims")
+      val dimDirs = (1 to nDims).map(i => tmp(s"mv_trunc_d$i"))
+      val mv = tmp(s"mv_trunc_v$nDims")
+      (fact +: dimDirs).foreach(MergeSink.setHistoryKeep(spark, _, 8))
+      MergeSink.upsertBatch(
+        (0L until 12L).map(i => (i, i % 3, i % 2, i * 10))
+          .toDF("id", "k1", "k2", "v").withColumn("rv", lit(1L)),
+        fact, "id", "rv", 0L, "load")
+      dimDirs.zipWithIndex.foreach { case (d, i) =>
+        MergeSink.upsertBatch(
+          (0L until 3L).map(k => (k, s"g$k"))
+            .toDF(s"k${i + 1}", s"w${i + 1}").withColumn("rv", lit(1L)),
+          d, s"k${i + 1}", "rv", 0L, "load")
+      }
+      val dims = dimDirs.zipWithIndex.map { case (d, i) =>
+        MaterializedViews.StarDim(d, s"k${i + 1}", s"k${i + 1}", s"k${i + 1}")
+      }
+      val group = if (nDims == 0) Seq("k1") else Seq("w1")
+      def refresh(): Long = MaterializedViews.refreshDir(
+        spark, fact, "id", mv, group, sumAggs, "algebraic", dims = dims)
+      assert(refresh() > 0L, s"$nDims dims: initial materialization")
+      // TRUNCATE: an overwrite with zero rows leaves no live row at the
+      // new head of the fact and of the first dim
+      (fact +: dimDirs.take(1)).zip(Seq("id", "k1")).foreach { case (d, k) =>
+        MergeSink.overwriteBatch(MergeSink.currentState(spark, d).get.limit(0),
+          d, k, "rv", 0L, "truncate")
+      }
+      refresh()
+      val live = MergeSink.currentState(spark, mv).map(_.count()).getOrElse(0L)
+      assert(live == 0L, s"$nDims dims: $live groups survived an empty fact")
+      assert(MaterializedViews.viewLag(spark, mv).map(_._2) == Some(0L),
+        s"$nDims dims: the emptied view must be current")
+    }
+  }
+
+  test("create_mv_join / create_mv_star: refreshes converge, lag 0, DROP unregisters") {
+    val cat = "mvjs"
+    val wh = tmp("mv_js_wh")
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE $cat.m")
+    spark.sql(
+      s"""CREATE TABLE $cat.m.fact (id BIGINT, gid BIGINT, sid BIGINT,
+         |v BIGINT, rv BIGINT)
+         |USING `graft-merge` OPTIONS (key 'id', seq 'rv')""".stripMargin)
+    spark.sql(
+      s"""CREATE TABLE $cat.m.dg (gid BIGINT, cat STRING, drv BIGINT)
+         |USING `graft-merge` OPTIONS (key 'gid', seq 'drv')""".stripMargin)
+    spark.sql(
+      s"""CREATE TABLE $cat.m.ds (sid BIGINT, zone BIGINT, drv BIGINT)
+         |USING `graft-merge` OPTIONS (key 'sid', seq 'drv')""".stripMargin)
+    spark.sql(s"""INSERT INTO $cat.m.fact VALUES (1, 1, 0, 10, 1),
+      |(2, 1, 1, 20, 1), (3, 2, 0, 30, 1), (4, 3, 1, 40, 1)""".stripMargin)
+    spark.sql(s"INSERT INTO $cat.m.dg VALUES (1, 'a', 1), (2, 'a', 1), (3, 'b', 1)")
+    spark.sql(s"INSERT INTO $cat.m.ds VALUES (0, 100, 1), (1, 200, 1)")
+    spark.sql(s"""CALL $cat.sys.create_mv_join('m.jv', 'm.fact', 'm.dg',
+      |'gid=gid', 'cat', 'total=sum:v,n=count:*', 'algebraic')""".stripMargin)
+      .collect()
+    spark.sql(s"""CALL $cat.sys.create_mv_star('m.sv', 'm.fact',
+      |'m.dg:gid=gid;m.ds:sid=sid', 'cat,zone', 'total=sum:v,n=count:*',
+      |'algebraic')""".stripMargin).collect()
+    def rows(q: String): Set[Seq[Any]] =
+      spark.sql(q).collect().map(_.toSeq).toSet
+    def check(): Unit = {
+      assert(rows(s"SELECT cat, total, n FROM $cat.m.jv") == rows(
+        s"""SELECT cat, sum(v), count(*) FROM $cat.m.fact f
+           |JOIN $cat.m.dg d ON f.gid = d.gid GROUP BY cat""".stripMargin))
+      assert(rows(s"SELECT cat, zone, total, n FROM $cat.m.sv") == rows(
+        s"""SELECT cat, zone, sum(v), count(*) FROM $cat.m.fact f
+           |JOIN $cat.m.dg d ON f.gid = d.gid
+           |JOIN $cat.m.ds z ON f.sid = z.sid GROUP BY cat, zone""".stripMargin))
+      Seq("jv", "sv").foreach { v =>
+        assert(spark.table(s"$cat.m.$v.detail").head()
+          .getAs[java.lang.Long]("mv_lag_versions") == 0L, s"$v lags")
+      }
+    }
+    check()
+    // move the fact and one dim; refresh_mv advances the join view,
+    // refresh_dependents the star view (and re-checks the join view)
+    spark.sql(s"INSERT INTO $cat.m.fact VALUES (5, 2, 1, 50, 2)")
+    spark.sql(s"DELETE FROM $cat.m.dg WHERE gid = 3")
+    assert(spark.sql(s"CALL $cat.sys.refresh_mv('m.jv')").head().getInt(0) > 0)
+    assert(spark.sql(s"CALL $cat.sys.refresh_dependents('m.dg')")
+      .head().getInt(0) == 2)
+    check()
+    // the definition persists the same way for both shapes
+    val props = spark.sql(s"SHOW TBLPROPERTIES $cat.m.jv")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props("graft.mv.dims") == "m.dg:gid=gid")
+    // DROP TABLE removes each view's line from every source's sidecar
+    def dirOf(t: String): String =
+      spark.table(s"$cat.m.$t.detail").head().getAs[String]("location")
+    val srcDirs = Seq("fact", "dg", "ds").map(dirOf)
+    def registered(): Seq[String] =
+      srcDirs.flatMap(MaterializedViews.dependentLines(spark, _))
+    // jv on fact + dg, sv on fact + dg + ds
+    assert(registered().size == 5, s"registrations: ${registered()}")
+    spark.sql(s"DROP TABLE $cat.m.jv")
+    spark.sql(s"DROP TABLE $cat.m.sv")
+    assert(registered().isEmpty, s"ghost registrations: ${registered()}")
   }
 }
