@@ -49,7 +49,9 @@ object Tables {
       spark: SparkSession,
       path: String): Seq[(String, MessageType)] =
     footerCache.computeIfAbsent(path, { key: String =>
-      val conf = spark.sessionState.newHadoopConf()
+      // the cache outlives any one session: read under the context's
+      // conf, not a per-call copy of this session's
+      val conf = spark.sparkContext.hadoopConfiguration
       val root = new Path(key)
       val fs = root.getFileSystem(conf)
       val dataFiles =

@@ -374,7 +374,9 @@ object Formats {
       spark: SparkSession,
       path: String): Set[String] = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
+    // footer metadata only: the context's conf, as MergeSink's own
+    // footer reads use, not a copy of the session's
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     fs.listStatus(root)

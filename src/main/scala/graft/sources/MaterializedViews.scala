@@ -19,15 +19,16 @@ import graft.streaming.MergeSink
   *    delta ([[MergeSink.changeDelta]]) into the stored aggregates —
   *    `SUM(x * __mult)` per group IS the change to `SUM(x)` — so a
   *    refresh reads ONLY the source buckets the range touched and the
-  *    view rows of the changed groups. ZERO source re-aggregation: at
-  *    100 TB, day-2 maintenance costs O(changed keys), not O(table).
+  *    view buckets its changed groups hash into, and rewrites those
+  *    view buckets in one pass. ZERO source re-aggregation: at 100 TB,
+  *    day-2 maintenance costs O(changed keys' buckets), not O(table).
   *  - `rescan` mode (any aggregate incl. min/max, which are not
   *    self-maintainable under deletes): recomputes ONLY the touched
   *    groups with a semi-join-pruned source pass; untouched groups are
   *    never read or written.
   *
   * EXACTLY-ONCE refresh rides the engine's own idempotence contract:
-  * the view commit is an upsert under a stable per-view `runId` whose
+  * every view commit runs under a stable per-view `runId` whose
   * manifest note records the applied version of every source. The
   * watermark is thus IN the commit log itself — a crashed refresh
   * replays as a no-op, and there is no out-of-band watermark to
@@ -92,11 +93,11 @@ object MaterializedViews {
     * avg = sum / count (NULL on the empty/all-NULL group). ONE
     * division — bit-identical to the oracle's SUM/COUNT quotient.
     */
-  private def derived(aggs: Seq[Agg]): Seq[Column] = aggs.collect {
+  private def derived(aggs: Seq[Agg]): Seq[(String, Column)] = aggs.collect {
     case Agg(a, "avg", _) =>
-      when(col(s"__${a}_c") === 0L, lit(null))
+      a -> when(col(s"__${a}_c") === 0L, lit(null))
         .otherwise(col(s"__${a}_s").cast(DoubleType) / col(s"__${a}_c"))
-        .cast(DoubleType).as(a)
+        .cast(DoubleType)
   }
 
   /** Hidden maintenance columns: `__n` (live rows per group — the
@@ -149,7 +150,7 @@ object MaterializedViews {
           count(lit(1)).as(RowCountCol)): _*)
     agged.select(
       (groupCols.map(col) ++ ex.map(a => col(a.alias)) ++
-        derived(aggs) :+ col(RowCountCol)): _*)
+        derived(aggs).map { case (a, q) => q.as(a) } :+ col(RowCountCol)): _*)
   }
 
   private def aggExpr(a: Agg): Column = a.kind match {
@@ -489,10 +490,8 @@ object MaterializedViews {
 
     // record an advanced vector whose passes wrote nothing
     def emptyAdvance(target: Seq[Long]): Unit =
-      MergeSink.currentState(spark, mvDir).foreach(st =>
-        MergeSink.upsertBatch(st.limit(0), mvDir, groupCsv, RefreshCol,
-          epochId = target.sum, runId = runId,
-          note = Some(vectorNote(target))))
+      MergeSink.rewriteBuckets(spark, mvDir, groupCsv, target.sum, runId,
+        Some(vectorNote(target)))(_ => ((), Set.empty[Int], None))
 
     def fullRebuild(): Long = {
       // every source at the head this commit RECORDS (a commit landing
@@ -583,10 +582,20 @@ object MaterializedViews {
     written
   }
 
-  /** Fold the retraction delta into the stored aggregates: one grouped
-    * pass over the delta, one key join against ONLY the changed view
-    * rows, one upsert. A group whose live-row count reaches zero is
-    * tombstoned out of the view.
+  /** Fold the retraction delta into the stored aggregates in ONE
+    * bucket-aligned pass, committed through
+    * [[MergeSink.rewriteBuckets]]:
+    *  1. the delta aggregate, computed once and tagged with each
+    *     group's view bucket;
+    *  2. the stored rows of ONLY the view buckets a changed group
+    *     hashes into;
+    *  3. one shuffle by bucket that lines each stored row up with its
+    *     group's delta and folds them into the buckets' new contents;
+    *  4. those buckets published as they are, with no second merge.
+    * A group whose live-row count reaches zero is tombstoned out of
+    * the view; the other rows of a rewritten bucket (tombstones
+    * included) pass through unchanged. Returns the groups written (0
+    * when this pass had already committed).
     */
   private def refreshAlgebraic(
       spark: SparkSession,
@@ -596,80 +605,135 @@ object MaterializedViews {
       aggs0: Seq[Agg],
       groupCsv: String,
       target: Seq[Long],
-      runId: String): Long = {
-    val mvStored = MergeSink.currentState(spark, mvDir)
-    // fold the stored (self-maintainable) parts. A view MATERIALIZED
-    // BEFORE the sum-companion format lacks the hidden __<alias>_nn
-    // columns — selecting them would fail the refresh outright; such a
-    // legacy view keeps the plain additive fold (its pre-existing
-    // all-NULL-sum edge) instead of breaking. Only COMPANIONS may be
-    // dropped; a missing BASE column is a real schema error and still
-    // fails loudly.
-    val aggs = {
-      val full = expand(aggs0)
-      mvStored match {
-        case Some(m) =>
-          val have = m.columns.toSet
+      runId: String): Long =
+    MergeSink.rewriteBuckets(spark, mvDir, groupCsv, target.sum, runId,
+        Some(vectorNote(target))) { h =>
+      val viewCols: Seq[String] = h.schema.map(_.fieldNames.toSeq)
+        .orElse(MergeSink.currentState(spark, mvDir).map(_.columns.toSeq))
+        .getOrElse(Seq.empty)
+      // fold the stored (self-maintainable) parts. A view MATERIALIZED
+      // BEFORE the sum-companion format lacks the hidden __<alias>_nn
+      // columns — selecting them would fail the refresh outright; such a
+      // legacy view keeps the plain additive fold (its pre-existing
+      // all-NULL-sum edge) instead of breaking. Only COMPANIONS may be
+      // dropped; a missing BASE column is a real schema error and still
+      // fails loudly.
+      val aggs = {
+        val full = expand(aggs0)
+        if (viewCols.isEmpty) full
+        else {
           val baseAliases = aggs0.flatMap {
             case Agg(a, "avg", c) => Seq(s"__${a}_s", s"__${a}_c")
             case Agg(a, _, _) => Seq(a)
           }.toSet
-          full.filter(a => have.contains(a.alias) ||
+          full.filter(a => viewCols.contains(a.alias) ||
             baseAliases.contains(a.alias))
-        case None => full
-      }
-    }
-    val dAgg = delta
-      .groupBy(groupCols.map(col): _*)
-      .agg(deltaExpr(aggs.head),
-        (aggs.tail.map(deltaExpr) :+
-          sum(col("__mult")).cast(LongType).as(RowCountCol)): _*)
-    val mv = mvStored
-      .getOrElse(dAgg.limit(0)) // view born empty (source was empty at create)
-    val mvCols = (aggs.map(_.alias) :+ RowCountCol)
-    val joined = dAgg.as("d").join(
-      mv.select((groupCols ++ mvCols).map(col): _*).as("m"),
-      groupCols, "left")
-    // Three-branch fold: SQL aggregates IGNORE NULL inputs, so a delta
-    // whose rows for a group are all NULL in the aggregated column
-    // yields a NULL change — the stored value must pass through
-    // unchanged (stored + NULL would poison it), and symmetrically a
-    // stored NULL (group whose live rows are all NULL) takes the delta.
-    def folded(c: String, merge: (Column, Column) => Column) = {
-      val m = col(s"m.$c"); val d = col(s"d.$c")
-      when(m.isNull, d).when(d.isNull, m).otherwise(merge(m, d))
-    }
-    def foldedAgg(a: Agg): Column = a.kind match {
-      case "min" => folded(a.alias, least(_, _))
-      case "max" => folded(a.alias, greatest(_, _))
-      case "sum" =>
-        // a group whose folded non-NULL-input count reaches 0 must
-        // store NULL, not the additive residue (SQL SUM of an all-NULL
-        // set is NULL) — the companion's fold decides
-        sumCompanion(aggs, a) match {
-          case Some(nn) =>
-            when(folded(nn, _ + _) === 0L, lit(null))
-              .otherwise(folded(a.alias, _ + _))
-          case None => folded(a.alias, _ + _)
         }
-      case _ => folded(a.alias, _ + _)
-    }
-    val foldedN = folded(RowCountCol, _ + _)
-    val out = joined.select(
-      (groupCols.map(col) ++
-        aggs.map(a => foldedAgg(a).as(a.alias)) :+
-        foldedN.cast(LongType).as(RowCountCol) :+
-        lit(target.sum).as(RefreshCol) :+
-        (foldedN === 0L).as(MergeSink.DeletedCol)): _*)
+      }
+      // 1. the delta aggregate, tagged with its view bucket; computed by
+      // the first job that reads it (the per-bucket count) and kept
+      val dAgg = delta
+        .groupBy(groupCols.map(col): _*)
+        .agg(deltaExpr(aggs.head),
+          (aggs.tail.map(deltaExpr) :+
+            sum(col("__mult")).cast(LongType).as(RowCountCol)): _*)
+        .withColumn("__b", h.bucketOf)
+        .localCheckpoint(eager = false)
+      // changed groups per bucket, counted task-locally: the touched
+      // buckets AND the refresh's report in one job, no shuffle
+      val perBucket = dAgg.select(col("__b")).rdd
+        .mapPartitions(_.map(_.getInt(0)).toSeq
+          .groupMapReduce(identity)(_ => 1L)(_ + _).iterator)
+        .collect()
+      val written = perBucket.map(_._2).sum
+      val touched = h.touched(dAgg, perBucket.map(_._1).toSet)
+      // 2. the stored rows of the touched buckets only
+      val stored = h.stored(touched)
+      val storedCols = stored.toSeq.flatMap(_.columns).filterNot(groupCols.contains)
+      val keys = col("__b") +: groupCols.map(col)
+      val dSide = dAgg.select(keys ++
+        (aggs.map(_.alias) :+ RowCountCol).map(c => col(c).as(s"__d_$c")) :+
+        lit(true).as("__d"): _*)
+      val sides = stored.fold(dSide)(m =>
+        m.select((h.bucketOf.as("__b") +: groupCols.map(col)) ++
+          storedCols.map(c => col(c).as(s"__m_$c")): _*)
+          .unionByName(dSide, allowMissingColumns = true))
+      // 3. one shuffle by bucket: a group has at most one stored and one
+      // delta row, so `first` pairs them; the output stays
+      // bucket-partitioned, as publish needs
+      val paired = sides
+        .repartition(col("__b"))
+        .groupBy(keys: _*)
+        .agg(first(col("__d"), ignoreNulls = true).as("__d"),
+          (storedCols.map(c => s"__m_$c") ++
+            (aggs.map(_.alias) :+ RowCountCol).map(c => s"__d_$c"))
+            .map(c => first(col(c), ignoreNulls = true).as(c)): _*)
+      val hasD = col("__d").isNotNull
+      def stor(c: String): Column =
+        if (storedCols.contains(c)) col(s"__m_$c") else lit(null)
+      // a tombstoned stored group is as absent as a missing one
+      val storedDead = coalesce(stor(MergeSink.DeletedCol), lit(false))
+      // Three-branch fold: SQL aggregates IGNORE NULL inputs, so a delta
+      // whose rows for a group are all NULL in the aggregated column
+      // yields a NULL change — the stored value must pass through
+      // unchanged (stored + NULL would poison it), and symmetrically a
+      // stored NULL (group whose live rows are all NULL) takes the delta.
+      def folded(c: String, merge: (Column, Column) => Column) = {
+        val m = when(storedDead, lit(null)).otherwise(stor(c))
+        val d = col(s"__d_$c")
+        when(m.isNull, d).when(d.isNull, m).otherwise(merge(m, d))
+      }
+      def foldedAgg(a: Agg): Column = a.kind match {
+        case "min" => folded(a.alias, least(_, _))
+        case "max" => folded(a.alias, greatest(_, _))
+        case "sum" =>
+          // a group whose folded non-NULL-input count reaches 0 must
+          // store NULL, not the additive residue (SQL SUM of an all-NULL
+          // set is NULL) — the companion's fold decides
+          sumCompanion(aggs, a) match {
+            case Some(nn) =>
+              when(folded(nn, _ + _) === 0L, lit(null))
+                .otherwise(folded(a.alias, _ + _))
+            case None => folded(a.alias, _ + _)
+          }
+        case _ => folded(a.alias, _ + _)
+      }
+      val foldedN = folded(RowCountCol, _ + _)
+      val fresh: Map[String, Column] =
+        (aggs.map(a => a.alias -> foldedAgg(a)) ++ Seq(
+          RowCountCol -> foldedN.cast(LongType),
+          RefreshCol -> epochCol(target.sum),
+          MergeSink.DeletedCol -> (foldedN === 0L))).toMap
+      val avgs = aggs0.collect { case Agg(a, "avg", _) => a }
+      // the view's own column order, then any column it lacks so far
+      val outCols = (viewCols ++ groupCols ++ aggs.map(_.alias) ++
+        Seq(RowCountCol, RefreshCol, MergeSink.DeletedCol) ++ avgs).distinct
+      // a group with a delta takes the fold; any other row passes
+      // through as stored (a column the fold does not write reads NULL
+      // on a folded row)
+      val foldedRows = paired.select((col("__b") +: col("__d") +: outCols.map { c =>
+        if (groupCols.contains(c)) col(c)
+        else if (c == MergeSink.DeletedCol)
+          when(hasD, fresh(c)).otherwise(storedDead).as(c)
+        else if (avgs.contains(c)) stor(c).as(c)
+        else when(hasD, fresh.getOrElse(c, lit(null))).otherwise(stor(c)).as(c)
+      }): _*)
       // derived quotients recompute from the freshly-folded parts
-      .select((col("*") +: derived(aggs0)): _*)
-      .localCheckpoint() // computed once: the report count AND the commit
-    val written = out.count() // O(changed groups) — the refresh's report
-    MergeSink.upsertBatch(
-      out, mvDir, groupCsv, RefreshCol, epochId = target.sum, runId = runId,
-      note = Some(vectorNote(target)))
-    written
-  }
+      val quotients = derived(aggs0).toMap
+      val out = foldedRows.select(foldedRows.columns.toSeq.filter(_ != "__d").map(c =>
+        quotients.get(c).fold(col(c))(q => when(hasD, q).otherwise(col(c)).as(c))): _*)
+      (written, touched, if (touched.isEmpty) None else Some(out))
+    }.getOrElse(0L)
+
+  /** The refresh epoch as a column that keeps it OUT of generated
+    * code: codegen inlines a Long literal into the class source, and
+    * Spark caches compiled classes by source, so a literal epoch would
+    * make every refresh compile its fold anew. A nondeterministic UDF
+    * is neither constant-folded nor inlined (its function is a
+    * referenced object).
+    */
+  private def epochCol(epoch: Long): Column =
+    udf(() => epoch).asNondeterministic()()
 
   /** Recompute ONLY the groups the delta touched: semi-join-pruned
     * source pass, anti-join for groups that vanished entirely.
@@ -697,7 +761,7 @@ object MaterializedViews {
     val out = recomputed
       .withColumn(MergeSink.DeletedCol, lit(false))
       .unionByName(vanished.withColumn(MergeSink.DeletedCol, lit(true)))
-      .withColumn(RefreshCol, lit(target.sum))
+      .withColumn(RefreshCol, epochCol(target.sum))
       .localCheckpoint() // computed once: the report count AND the commit
     val written = out.count()
     MergeSink.upsertBatch(

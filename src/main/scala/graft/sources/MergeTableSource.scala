@@ -653,6 +653,9 @@ class GraftMergeScanBuilder(
         MergeTableUtil.currentDataFiles(spark, dir, v)
     }
     val files: Seq[String] = byBucket.values.flatMap(_._2).toSeq
+    // one copy of the session's Hadoop conf serves every footer read
+    // below
+    lazy val conf = spark.sessionState.newHadoopConf()
     // tombstone rejection against the RESOLVED version's own files —
     // a time-travel aggregate must not trust the HEAD schema (the
     // snapshots can differ): manifest flags when present, else the
@@ -661,16 +664,14 @@ class GraftMergeScanBuilder(
       val flags = MergeSink.manifestDeletedFlags(spark, dir, version.get)
       val hasTombstoneCol =
         if (byBucket.keySet.forall(flags.contains)) flags.exists(_._2 == 1L)
-        else {
-          val conf = spark.sessionState.newHadoopConf()
+        else
           files.exists(f =>
             MergeTableUtil.footerOf(conf, f)
               .containsField(MergeSink.DeletedCol))
-        }
       if (hasTombstoneCol) return None
     }
     wanted.flatMap { fns =>
-      FooterStats.compute(spark, files, fns).map { values =>
+      FooterStats.compute(conf, files, fns).map { values =>
         (StructType(fns.map { case (n, dt, _) => StructField(n, dt) }),
           values,
           s"files=${files.size}")
@@ -759,13 +760,12 @@ class GraftMergeScanBuilder(
 private[graft] object FooterStats {
 
   def compute(
-      spark: SparkSession,
+      conf: org.apache.hadoop.conf.Configuration,
       files: Seq[String],
       fns: Seq[(String, DataType, org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc)])
       : Option[Array[Any]] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate._
-    val conf = spark.sessionState.newHadoopConf()
     // one footer read per file, all blocks' column statistics merged.
     // minMaxOk goes false the moment any chunk with non-null values
     // carries no usable min/max (dropped oversized binary stats, absent

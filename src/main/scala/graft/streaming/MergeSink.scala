@@ -1162,26 +1162,36 @@ object MergeSink {
       runId: String = "batch",
       reRegister: Boolean = false,
       note: Option[String] = None): Unit =
-    planUpsert(batch, dir, key, seq, epochId, runId, reRegister).foreach {
-      pc0 =>
-        var pc = pc0
-        var done = false
-        while (!done) {
-          try {
-            publish(
-              pc.spark, dir, pc.nb, pc.prevManifest, pc.touched, pc.rows,
-              pc.newV, runId, epochId, prevVersion = pc.prevVersion,
-              note = note, specGens = Some(pc.specGens))
-            done = true
-          } catch {
-            case e: ConcurrentCommitException =>
-              rebased(pc.spark, dir, pc) match {
-                case Some(next) => pc = next
-                case None => throw e
-              }
+    planUpsert(batch, dir, key, seq, epochId, runId, reRegister)
+      .foreach(publishPlanned(dir, runId, epochId, note, _))
+
+  /** Publish a planned single-table commit, re-pointing it with
+    * [[rebased]] while it loses version-claim races it can rebase past.
+    */
+  private def publishPlanned(
+      dir: String,
+      runId: String,
+      epochId: Long,
+      note: Option[String],
+      pc0: PlannedCommit): Unit = {
+    var pc = pc0
+    var done = false
+    while (!done) {
+      try {
+        publish(
+          pc.spark, dir, pc.nb, pc.prevManifest, pc.touched, pc.rows,
+          pc.newV, runId, epochId, prevVersion = pc.prevVersion,
+          note = note, specGens = Some(pc.specGens))
+        done = true
+      } catch {
+        case e: ConcurrentCommitException =>
+          rebased(pc.spark, dir, pc) match {
+            case Some(next) => pc = next
+            case None => throw e
           }
-        }
+      }
     }
+  }
 
   /** Rebases [[rebased]] performed since JVM start — spec
     * observability for the retry-less disjoint-writer path.
@@ -1257,19 +1267,95 @@ object MergeSink {
       // spec file no longer describes
       specGens: Seq[SpecGen] = Seq.empty)
 
-  private def planUpsert(
-      batch: DataFrame,
+  /** The head a commit is planned against, after the checks every
+    * planned commit makes before data moves ([[planHead]]). Its
+    * methods give a caller the table's bucket layout at that head.
+    */
+  private[graft] final case class CommitHead(
+      spark: SparkSession,
       dir: String,
       key: String,
-      seq: String,
+      last: Option[Commit],
+      newV: Long,
+      gens: Seq[SpecGen],
+      prevManifest: Map[Int, Long],
+      nb: Int) {
+
+    /** A row's bucket under the current layout, from its key columns. */
+    lazy val bucketOf: Column = tableBucketExprGens(spark, dir, gens, key, nb)
+
+    /** Every bucket a write of `keys` (rows carrying the key columns)
+      * rewrites, given the current-layout buckets `hashed` they hash
+      * into. PARTITION-SPEC EVOLUTION, lazy migration on touch: a key
+      * may still live in a RETIRED generation's bucket — include every
+      * retired-generation bucket the keys hash into (and that still
+      * holds data). The rewrite recomputes __b from row VALUES under
+      * the current layout, so the whole old bucket migrates
+      * (bucket-granular copy-on-write) and its entry drops; the
+      * current-generation buckets its rows land in are included too,
+      * so their existing content survives the rewrite.
+      */
+    def touched(keys: DataFrame, hashed: Set[Int]): Set[Int] = {
+      if (gens.size <= 1 || hashed.isEmpty) return hashed
+      val hk = hashKeyOf(spark, dir, key)
+      val oldGen = keys
+        .select(explode(array(
+          gens.init.map(g => genBucketExpr(g, hk)): _*)).as("__b"))
+        .distinct()
+        .collect()
+        .map(_.getInt(0))
+        .toSet
+        .intersect(prevManifest.keySet)
+      if (oldGen.isEmpty) return hashed
+      // one column-pruned pass over the migrating buckets: where do
+      // their rows land under the current layout?
+      val migratedOut = stored(oldGen).toSeq.flatMap(
+        _.select(bucketOf.as("__b")).distinct().collect().map(_.getInt(0)))
+      hashed ++ oldGen ++ migratedOut
+    }
+
+    /** The stored rows of `buckets` at this head, tombstones included,
+      * resolved through its schema's column mapping (files written
+      * before a RENAME still carry the old physical name). None when
+      * none of them holds data.
+      */
+    def stored(buckets: Set[Int]): Option[DataFrame] = {
+      val paths = buckets.toSeq.sorted
+        .flatMap(b => prevManifest.get(b).map(v => dataPath(spark, dir, b, v)))
+      if (paths.isEmpty) None
+      else Some(currentViewAt(spark, dir, last.get.version,
+        bucketRead(spark, dir, last.get.version, paths)))
+    }
+
+    /** The union schema recorded at this head (None on a legacy or
+      * unborn table).
+      */
+    def schema: Option[StructType] =
+      last.flatMap(c => manifestSchema(spark, dir, c.version))
+
+    private[MergeSink] def plan(
+        touched: Set[Int], rows: Option[DataFrame]): PlannedCommit =
+      PlannedCommit(spark, nb, prevManifest, touched, rows, newV,
+        last.map(_.version), specGens = gens)
+  }
+
+  /** The checks every planned commit makes before data moves: the
+    * (runId, epoch) replay check (None: already committed, even if
+    * fenced since), `admit` (the caller's own validation), the writer
+    * fence and the epoch-regression check; then the head's bucket
+    * layout.
+    */
+  private def planHead(
+      spark: SparkSession,
+      dir: String,
+      key: String,
       epochId: Long,
       runId: String,
-      reRegister: Boolean): Option[PlannedCommit] = {
-    val spark = batch.sparkSession
+      reRegister: Boolean)(admit: => Unit): Option[CommitHead] = {
     val all = commits(spark, dir)
     if (all.exists(c => c.runId == runId && c.epoch == epochId))
       return None // idempotent replay of a committed batch (even if fenced since)
-    enforceConstraints(batch, dir) // before anything stages
+    admit
     ensureWriter(spark, dir, runId, reRegister)
     val last = all.lastOption
     last.foreach { c =>
@@ -1301,8 +1387,6 @@ object MergeSink {
     }.getOrElse(spec.map(_.nb).getOrElse(DefaultBuckets))
 
     val kcols = keyCols(key)
-    kcols.foreach(k => require(batch.columns.contains(k),
-      s"merge batch lacks key column '$k' (${batch.columns.mkString(",")})"))
     spec.foreach(ps => require(kcols.contains(ps.column),
       s"partitioned table: transform column '${ps.column}' must be one " +
         s"of the merge key columns (${kcols.mkString(",")}) — a key's " +
@@ -1317,57 +1401,36 @@ object MergeSink {
         s"bucket_by column '$c' must be one of the merge key columns " +
           s"(${kcols.mkString(",")}) — a key's bucket must be stable " +
           "across upserts")))
-    val bucketOf = tableBucketExprGens(spark, dir, gens, key, nb)
+    Some(CommitHead(spark, dir, key, last, newV, gens, prevManifest, nb))
+  }
+
+  private def planUpsert(
+      batch: DataFrame,
+      dir: String,
+      key: String,
+      seq: String,
+      epochId: Long,
+      runId: String,
+      reRegister: Boolean): Option[PlannedCommit] = {
+    val h = planHead(batch.sparkSession, dir, key, epochId, runId, reRegister)(
+      enforceConstraints(batch, dir) // before anything stages
+    ).getOrElse(return None)
+    val kcols = keyCols(key)
+    kcols.foreach(k => require(batch.columns.contains(k),
+      s"merge batch lacks key column '$k' (${batch.columns.mkString(",")})"))
     val cols = batch.columns.filter(_ != "__b")
     val batchC = batch.select(cols.map(col).toIndexedSeq: _*)
     // Which buckets does this batch touch? (≤ nb values — metadata, not data)
-    val touched0 = batchC
-      .select(bucketOf.as("__b"))
+    val touched = h.touched(batchC, batchC
+      .select(h.bucketOf.as("__b"))
       .distinct()
       .collect()
       .map(_.getInt(0))
-      .toSet
-    // PARTITION-SPEC EVOLUTION, lazy migration on touch: a batch key
-    // may still live in a RETIRED generation's bucket — include every
-    // retired-generation bucket the batch's keys hash into (and that
-    // still holds data) in the merge read set. The merge recomputes
-    // __b from row VALUES under the current layout, so the whole old
-    // bucket migrates (bucket-granular copy-on-write) and its entry
-    // drops; the current-generation buckets its rows land in are read
-    // too, so their existing content survives the rewrite.
-    val hk0 = hashKeyOf(spark, dir, key)
-    val oldGenTouched: Set[Int] =
-      if (gens.size <= 1 || touched0.isEmpty) Set.empty
-      else batchC
-        .select(explode(array(
-          gens.init.map(g => genBucketExpr(g, hk0)): _*)).as("__b"))
-        .distinct()
-        .collect()
-        .map(_.getInt(0))
-        .toSet
-        .intersect(prevManifest.keySet)
-    val migratedOut: Set[Int] =
-      if (oldGenTouched.isEmpty) Set.empty
-      else {
-        val paths = oldGenTouched.toSeq.sorted
-          .flatMap(b => prevManifest.get(b).map(v => dataPath(spark, dir, b, v)))
-        // one column-pruned pass over the migrating buckets: where do
-        // their rows land under the current layout?
-        currentViewAt(spark, dir, last.get.version,
-          bucketRead(spark, dir, last.get.version, paths))
-          .select(bucketOf.as("__b"))
-          .distinct()
-          .collect()
-          .map(_.getInt(0))
-          .toSet
-      }
-    val touched = touched0 ++ oldGenTouched ++ migratedOut
+      .toSet)
 
     val merged =
       if (touched.isEmpty) None // empty batch: commit a no-data-change version
       else {
-        val touchedPaths = touched.toSeq.sorted
-          .flatMap(b => prevManifest.get(b).map(v => dataPath(spark, dir, b, v)))
         // The tombstone column may exist on either side only (a CDC
         // batch onto a pre-CDC table, or a pure-upsert batch onto a CDC
         // table): absent means "not deleted" on both. Any OTHER column
@@ -1377,20 +1440,15 @@ object MergeSink {
         def withDeleted(df: DataFrame): DataFrame =
           if (df.columns.contains(DeletedCol)) df
           else df.withColumn(DeletedCol, lit(false))
-        val base =
-          if (touchedPaths.isEmpty) batchC
-          else {
-            // resolve the stored side through the current schema's
-            // column mapping: files written before a RENAME still
-            // carry the old physical name (no-op when never renamed)
-            val stored = currentViewAt(spark, dir, last.get.version,
-              bucketRead(spark, dir, last.get.version, touchedPaths))
+        val base = h.stored(touched) match {
+          case None => batchC
+          case Some(stored) =>
             if (stored.columns.contains(DeletedCol) ||
               cols.contains(DeletedCol))
               withDeleted(stored)
                 .unionByName(withDeleted(batchC), allowMissingColumns = true)
             else stored.unionByName(batchC, allowMissingColumns = true)
-          }
+        }
         // ONE shuffle does both jobs: partition by bucket up front, then
         // aggregate on (__b, key) — the bucket is a function of the key,
         // so the groups are unchanged, and HashPartitioning(__b)
@@ -1399,7 +1457,7 @@ object MergeSink {
         // exactly what publish's one-file-per-bucket write needs; the
         // former shape (key-shuffled agg + repartition(__b) in publish)
         // paid the merge row volume through the shuffle twice.
-        val withB = base.withColumn("__b", bucketOf)
+        val withB = base.withColumn("__b", h.bucketOf)
         val rest = withB.columns.filter(c => !kcols.contains(c) && c != "__b")
         Some(
           withB
@@ -1410,11 +1468,34 @@ object MergeSink {
             .select((col("__b") +: kcols.map(col)) ++
               rest.map(c => col(s"st.$c").as(c)): _*))
       }
-
-    Some(PlannedCommit(
-      spark, nb, prevManifest, touched, merged, newV, last.map(_.version),
-      specGens = gens))
+    Some(h.plan(touched, merged))
   }
+
+  /** ONE-PASS BUCKET REWRITE: the commit path of a caller that computes
+    * the whole new content of the buckets it touches itself (a
+    * materialized view folding its delta into the stored aggregates).
+    * It makes [[upsertBatch]]'s checks ([[planHead]]) and publishes
+    * through the same spec fence and [[rebased]] loop, but skips the
+    * merge: `rewrite` gets the head and returns its result, the buckets
+    * it rewrites and their rows — each carrying `__b` and
+    * hash-partitioned by it, like [[expireTombstones]]' rows (None
+    * commits a version that changes no data). Returns None when this
+    * (runId, epoch) has already committed.
+    */
+  private[graft] def rewriteBuckets[T](
+      spark: SparkSession,
+      dir: String,
+      key: String,
+      epochId: Long,
+      runId: String,
+      note: Option[String])(
+      rewrite: CommitHead => (T, Set[Int], Option[DataFrame])): Option[T] =
+    planHead(spark, dir, key, epochId, runId, reRegister = false)(()).map { h =>
+      val (out, touched, rows) = rewrite(h)
+      rows.foreach(enforceConstraints(_, dir))
+      publishPlanned(dir, runId, epochId, note, h.plan(touched, rows))
+      out
+    }
 
   /** One participant of a multi-table transaction: a merge-upsert
     * batch destined for `dir` under that table's (key, seq) contract.
@@ -2240,8 +2321,9 @@ object MergeSink {
     rows.foreach { m =>
       // data first: one partitioned write of the touched buckets. The
       // caller guarantees `m` is hash-partitioned by "__b" (upsertBatch
-      // fuses it into the merge aggregate; expireTombstones repartitions
-      // explicitly): a touched bucket is ONE task writing ONE file —
+      // fuses it into the merge aggregate, a rewriteBuckets caller into
+      // its own; expireTombstones repartitions explicitly): a touched
+      // bucket is ONE task writing ONE file —
       // the CoW contract of a bucket as a unit of O(100 MB-1 GB) at
       // production scale. Without that layout every upstream task would
       // write its own shard of every bucket (tasks × buckets files).

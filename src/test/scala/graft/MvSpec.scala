@@ -98,6 +98,9 @@ class MvSpec extends SparkSpec {
       "net-collapsed key must not appear in the range delta")
   }
 
+  /** Spark jobs one algebraic refresh of a small 0-dim view may run. */
+  private val MaxRefreshJobs = 6
+
   private val sumAggs =
     Seq(Agg("total", "sum", "v"), Agg("n", "count", "*"))
 
@@ -771,5 +774,134 @@ class MvSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $cat.m.jv")
     spark.sql(s"DROP TABLE $cat.m.sv")
     assert(registered().isEmpty, s"ghost registrations: ${registered()}")
+  }
+
+  /** Spark jobs `op` starts on this thread: a listener tags each job by
+    * its job group, and a fence job run after `op` marks when every
+    * earlier job start has reached it (the bus delivers in order).
+    */
+  private def jobsOf[T](op: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("mvspec-op", "counted")
+      val out = try op finally sc.clearJobGroup()
+      sc.setJobGroup("mvspec-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!groups.contains("mvspec-fence") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      assert(groups.contains("mvspec-fence"), "listener never saw the fence job")
+      (out, groups.toArray.count(_ == "mvspec-op"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one-pass algebraic refresh: few jobs, untouched view buckets keep their files") {
+    val src = tmp("mv_1p_src")
+    val mv = tmp("mv_1p_v")
+    MergeSink.upsertBatch(
+      df((0 until 200).map(i => (i.toLong, i.toLong % 40, i.toLong)), 1L),
+      src, "id", "rv", 0L, "load")
+    assert(MaterializedViews.refreshDir(
+      spark, src, "id", mv, Seq("grp"), sumAggs, "algebraic") == 40L)
+    val v0 = MergeSink.lastCommit(spark, mv).get.version
+    val before = MergeSink.manifest(spark, mv, v0)
+    // move two groups: an update inside grp 1, a key from grp 2 to 3
+    MergeSink.upsertBatch(df(Seq((1L, 1L, 500L), (2L, 3L, 2L)), 2L),
+      src, "id", "rv", 1L, "load")
+    val (g, jobs) = jobsOf(MaterializedViews.refreshDir(
+      spark, src, "id", mv, Seq("grp"), sumAggs, "algebraic"))
+    assert(g == 3L, s"groups 1, 2 and 3 changed: wrote $g")
+    // the delta's stages, the per-bucket count and the bucket rewrite;
+    // no view-wide read, no report count, no second merge
+    assert(jobs <= MaxRefreshJobs,
+      s"one algebraic refresh ran $jobs Spark jobs (at most $MaxRefreshJobs)")
+    assert(viewState(mv, sumAggs) == fullAgg(src, sumAggs))
+    val v1 = MergeSink.lastCommit(spark, mv).get.version
+    val after = MergeSink.manifest(spark, mv, v1)
+    val nb = MergeSink.bucketCount(spark, mv, v1)
+    val s = spark
+    import s.implicits._
+    val hit = Seq(1L, 2L, 3L).toDF("grp")
+      .select(MergeSink.bucketExpr("grp", nb)).collect().map(_.getInt(0)).toSet
+    val untouched = before.keySet -- hit
+    assert(untouched.nonEmpty, s"precondition: 40 groups over $nb buckets")
+    untouched.foreach(b => assert(after.get(b) == before.get(b),
+      s"bucket $b holds no changed group but was rewritten"))
+    hit.foreach(b => assert(after.get(b).contains(v1),
+      s"bucket $b holds a changed group but was not rewritten"))
+  }
+
+  test("one-pass algebraic refresh: vanish and return, all-NULL sum, avg; tombstones") {
+    val s = spark
+    import s.implicits._
+    val src = tmp("mv_seq_src")
+    val mv = tmp("mv_seq_v")
+    MergeSink.setHistoryKeep(spark, src, 8)
+    def rows(t: Seq[(Long, Long, java.lang.Long)], rv: Long): DataFrame =
+      t.toDF("id", "grp", "v").withColumn("rv", lit(rv))
+    def deleted(t: Seq[(Long, Long, java.lang.Long)], rv: Long): DataFrame =
+      rows(t, rv).withColumn("__deleted", lit(true))
+    val aggs = Seq(Agg("total", "sum", "v"), Agg("n", "count", "*"),
+      Agg("mean", "avg", "v"))
+    def check(step: String): Unit = {
+      val expected = MergeSink.currentState(spark, src).get
+        .groupBy(col("grp"))
+        .agg(sum(col("v")), count(lit(1)), avg(col("v")))
+        .collect().map(r => r.getLong(0) -> Seq(r.get(1), r.get(2), r.get(3)))
+        .toMap
+      assert(viewState(mv, aggs) == expected, s"$step: view != from-scratch")
+    }
+    /** (grp, __n, total, n, mean, __rv) of the view's tombstone rows. */
+    def tombstones(): Set[Seq[Any]] = {
+      val files = MergeSink.currentFiles(spark, mv).values.flatten.toSeq
+      val raw = spark.read.option("mergeSchema", true).parquet(files: _*)
+      if (!raw.columns.contains(MergeSink.DeletedCol)) Set.empty
+      else raw.filter(col(MergeSink.DeletedCol))
+        .select("grp", "__n", "total", "n", "mean", "__rv")
+        .collect().map(_.toSeq).toSet
+    }
+    def refresh(): Long = MaterializedViews.refreshDir(
+      spark, src, "id", mv, Seq("grp"), aggs, "algebraic")
+    // v0: grp 0 = {10, NULL}; grp 1 all NULL; grp 2 = {40, 41}
+    MergeSink.upsertBatch(
+      rows(Seq((1L, 0L, 10L), (2L, 0L, null), (3L, 1L, null),
+        (4L, 2L, 40L), (5L, 2L, 41L)), 1L), src, "id", "rv", 0L, "load")
+    assert(refresh() == 3L)
+    check("materialize")
+    // v1: grp 2 vanishes; grp 0's NULL row becomes 5
+    MergeSink.upsertBatch(
+      rows(Seq((2L, 0L, 5L)), 2L).withColumn("__deleted", lit(false))
+        .unionByName(deleted(Seq((4L, 2L, 40L), (5L, 2L, 41L)), 2L)),
+      src, "id", "rv", 1L, "load")
+    assert(refresh() == 2L)
+    check("vanish")
+    assert(!viewState(mv, aggs).contains(2L))
+    assert(tombstones() == Set(Seq(2L, 0L, null, 0L, null, 1L)))
+    // v2: grp 2 returns holding only a NULL; grp 1 gains a 7
+    MergeSink.upsertBatch(rows(Seq((6L, 2L, null), (7L, 1L, 7L)), 3L),
+      src, "id", "rv", 2L, "load")
+    assert(refresh() == 2L)
+    check("return")
+    assert(viewState(mv, aggs)(2L) == Seq(null, 1L, null),
+      "a returning all-NULL group: NULL sum and avg, one row")
+    assert(tombstones().isEmpty, "the returning group replaced its tombstone")
+    // v3: grp 1 back to all NULL; grp 0 untouched; grp 2's NULL becomes 9
+    MergeSink.upsertBatch(
+      rows(Seq((6L, 2L, 9L)), 4L).withColumn("__deleted", lit(false))
+        .unionByName(deleted(Seq((7L, 1L, 7L)), 4L)),
+      src, "id", "rv", 3L, "load")
+    assert(refresh() == 2L)
+    check("retract to NULL")
+    assert(viewState(mv, aggs)(1L) == Seq(null, 1L, null))
+    assert(refresh() == 0L, "at head")
   }
 }

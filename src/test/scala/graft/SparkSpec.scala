@@ -12,8 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
+    // the engine's own session settings (SessionTuning), so the suite
+    // runs on the filesystem and class loaders the mains run on
+    val s = SessionTuning.tuned(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .appName("graft-test")
