@@ -324,10 +324,20 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
-/** Conf-based registration: `spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** Conf-based registration: `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Installs the as-of join planning and pruning, the transparent MV
+  * rewrite, the SQL functions, and [[DriverReadStrategy]]: a key-pinned
+  * `graft-merge` read of at most
+  * [[graft.sources.GraftMergeScan.DriverReadMaxFiles]] planned files and
+  * [[graft.sources.GraftMergeScan.DriverReadMaxBytes]] runs on the driver,
+  * with no Spark job and no generated class.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    // key-pinned reads of small merge-table buckets answer on the
+    // driver: no job, no generated class (see DriverReadStrategy)
+    ext.injectPlannerStrategy(_ => DriverReadStrategy)
     ext.injectOptimizerRule(_ => AsOfJoinPruning)
     // opt-in transparent MV rewrite (spark.graft.mvRewrite=true):
     // fresh single-table views serve matching source aggregates

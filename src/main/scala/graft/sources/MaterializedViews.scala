@@ -511,7 +511,22 @@ object MaterializedViews {
           f, mvDir, groupCsv, RefreshCol,
           epochId = heads.sum, runId = runId,
           note = Some(vectorNote(heads)))
-        MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L)
+        // the rows the overwrite committed, from its manifest; a bucket
+        // without the row field, or carrying tombstones (which the
+        // figure counts), falls back to counting the view
+        MergeSink.commits(spark, mvDir)
+          .find(c => c.runId == runId && c.epoch == heads.sum)
+          .flatMap { c =>
+            val rows = MergeSink.manifestRows(spark, mvDir, c.version)
+            val flags = MergeSink.manifestDeletedFlags(spark, mvDir, c.version)
+            val buckets = MergeSink.manifest(spark, mvDir, c.version).keySet
+            if (buckets.forall(b =>
+                rows.contains(b) && flags.get(b).contains(0L)))
+              Some(buckets.toSeq.map(rows).sum)
+            else None
+          }
+          .getOrElse(
+            MergeSink.currentState(spark, mvDir).map(_.count()).getOrElse(0L))
       }
     }
 

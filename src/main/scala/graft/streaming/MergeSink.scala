@@ -271,8 +271,7 @@ object MergeSink {
     // freeze the retiring generation's TRUE modulus (the head
     // manifest's, which a rebucketing compaction may have moved off
     // the originally declared one), then append the new generation
-    val retired = gens.init :+
-      SpecGen(gens.last.spec.copy(nb = headNb), gens.last.offset)
+    val retired = decodeTable(gens, headNb)
     val all = retired :+ SpecGen(PartitionSpec(kind, cur.column, nb), newOffset)
     // CLAIM THE PIN VERSION FIRST, then rewrite the spec file under
     // the claim (the fence order publish itself uses): two concurrent
@@ -581,12 +580,7 @@ object MergeSink {
       throw new IllegalStateException(
         s"dropPartitions: $dir has no committed version"))
     val headNb = numBuckets(spark, dir, last.version)
-    // decode table: retired generations' moduli are frozen in their
-    // spec lines; the CURRENT generation's is the head manifest's
-    val decode =
-      if (gens.isEmpty) gens
-      else gens.init :+
-        SpecGen(gens.last.spec.copy(nb = headNb), gens.last.offset)
+    val decode = decodeTable(gens, headNb)
     val predOf: SpecGen => Option[Int => Boolean] = g =>
       partIdxOf(g.spec, value).map { cut =>
         op match {
@@ -2801,6 +2795,57 @@ object MergeSink {
     removed
   }
 
+  /** The generation decode table of a snapshot: retired generations'
+    * moduli are frozen in their spec lines; the current generation's is
+    * the snapshot's manifest header `headNb` (the rebucketing-compaction
+    * authority). Empty = not a partitioned table.
+    */
+  private[graft] def decodeTable(gens: Seq[SpecGen], headNb: => Int): Seq[SpecGen] =
+    if (gens.isEmpty) gens
+    else gens.init :+ SpecGen(gens.last.spec.copy(nb = headNb), gens.last.offset)
+
+  /** The global bucket ids key tuples can occupy, as a predicate over
+    * ids: the one driver-side copy of the writer's layout rule
+    * ([[genBucketExpr]] — `offset + partIdx * nb + hash` per generation,
+    * the bare hash when unpartitioned), shared by [[lookupFilesTuples]]
+    * and the `graft-merge` source's key pruning. `decode` is the
+    * snapshot's [[decodeTable]] (empty = unpartitioned, modulus `nb`),
+    * `hashOf(t, modulus)` the writer's `pmod(xxhash64(…), modulus)` of a
+    * tuple's hashed columns, and `partPos` the partition column's
+    * position in each tuple. On an evolved table a key may still live in
+    * any retired generation (migration is lazy): each tuple yields one
+    * candidate per generation, at that generation's granularity and
+    * modulus. A tuple without the partition value (`partPos` None), or
+    * with one whose type [[partIdxOf]] does not recognize, keeps every
+    * bucket of the generation with its hash component — a superset,
+    * never a miss. A negative index is no bucket: the writer refuses one.
+    */
+  private[graft] def keyBucketPred(
+      decode: Seq[SpecGen],
+      nb: => Int,
+      tuples: Seq[Seq[Any]],
+      partPos: Option[Int])(
+      hashOf: (Seq[Any], Int) => Int): Int => Boolean =
+    if (decode.isEmpty) tuples.map(hashOf(_, nb)).toSet
+    else {
+      val exact = Set.newBuilder[Int]
+      val anyPart = Set.newBuilder[(Int, Int)] // (generation offset, hash)
+      for (t <- tuples; g <- decode) {
+        val h = hashOf(t, g.spec.nb)
+        partPos.map(p => partIdxOf(g.spec, t(p))) match {
+          case Some(Some(idx)) =>
+            if (idx >= 0) exact += g.offset + idx * g.spec.nb + h
+          case _ => anyPart += (g.offset -> h)
+        }
+      }
+      val ids = exact.result()
+      val hashes = anyPart.result()
+      b => ids.contains(b) || hashes.nonEmpty && {
+        val g = genOfBucket(decode, b)
+        hashes.contains(g.offset -> Math.floorMod(b - g.offset, g.spec.nb))
+      }
+    }
+
   /** Data files a point lookup for `keys` must read — the bucket-pruned
     * slice of the current snapshot. Keys hash with the SAME expression
     * the writer bucketed by (`pmod(xxhash64(key), nb)`), so the lookup
@@ -2808,7 +2853,7 @@ object MergeSink {
     * at 100 TB a single-key read touches one O(100 MB–1 GB) bucket, not
     * the table. Callers must pass values of the key column's exact type
     * (xxhash64 of an INT and of a BIGINT differ). The bucket ids are
-    * computed in one constant-folded 1-row job — metadata, not data.
+    * computed on the driver ([[keyBucketPred]]) — metadata, no Spark job.
     */
   def lookupFiles(
       spark: SparkSession,
@@ -2828,16 +2873,9 @@ object MergeSink {
     lastCommit(spark, dir) match {
       case None => Seq.empty
       case Some(c) =>
-        val nb = numBuckets(spark, dir, c.version)
         val m = manifest(spark, dir, c.version)
-        val gens = partitionSpecGens(spark, dir)
-        // decode table: retired generations' moduli frozen in their
-        // lines; the current generation's is the head manifest's
-        val decode =
-          if (gens.isEmpty) gens
-          else gens.init :+
-            SpecGen(gens.last.spec.copy(nb = nb), gens.last.offset)
-        val spec = decode.lastOption.map(_.spec)
+        val decode = decodeTable(partitionSpecGens(spark, dir),
+          numBuckets(spark, dir, c.version))
         // bucket_by layout: the hash covers only the declared columns —
         // select their positions out of the full key tuple. Without a
         // key list, tuples whose arity EQUALS the bucket_by arity ARE
@@ -2860,49 +2898,32 @@ object MergeSink {
             None // tuples are already the hashed columns
           }
         }
-        def hashOf(t: Seq[Any], modulus: Int): Column = {
-          val hv = hashPos.map(_.map(t)).getOrElse(t)
-          pmod(xxhash64(hv.map(lit).toIndexedSeq: _*), lit(modulus))
-            .cast("int")
-        }
         // partitioned layout: the global bucket id interleaves the
-        // partition index above the hash — derive it with the WRITER'S
-        // OWN expression over the pushed literal (same session-tz
-        // arithmetic), or the lookup silently reads the wrong buckets.
-        // On an EVOLVED table a key may still live in any retired
-        // generation's bucket (migration is lazy): probe one candidate
-        // bucket PER GENERATION, each at that generation's granularity
-        // and modulus.
-        val bucketExprs: Seq[Column] = spec match {
-          case None => tuples.map(hashOf(_, nb))
-          case Some(ps) =>
-            require(key.nonEmpty,
-              s"lookupFilesTuples: $dir is partitioned — pass the key " +
-                "column list so the partition value can be located")
-            val kcols = keyCols(key)
-            val pi = kcols.indexOf(ps.column)
-            require(pi >= 0,
-              s"lookupFilesTuples: partition column ${ps.column} not in " +
-                s"key $kcols")
-            for {
-              t <- tuples
-              g <- decode
-            } yield {
-              val idx = partIdxExprOn(g.spec, lit(t(pi)))
-              // unresolvable partition value -> impossible bucket -> miss
-              (when(idx.isNull || idx < 0, lit(-1 - g.offset))
-                .otherwise(idx) * lit(g.spec.nb) +
-                lit(g.offset) + hashOf(t, g.spec.nb)).cast("int")
-            }
+        // partition index above the hash, so the tuple must carry the
+        // partition value
+        val partPos: Option[Int] = decode.lastOption.map { g =>
+          require(key.nonEmpty,
+            s"lookupFilesTuples: $dir is partitioned — pass the key " +
+              "column list so the partition value can be located")
+          val kcols = keyCols(key)
+          val pi = kcols.indexOf(g.spec.column)
+          require(pi >= 0,
+            s"lookupFilesTuples: partition column ${g.spec.column} not " +
+              s"in key $kcols")
+          pi
         }
-        val buckets = spark
-          .range(1)
-          .select(array(bucketExprs.toIndexedSeq: _*).as("bs"))
-          .head()
-          .getSeq[Int](0)
-          .toSet
-        buckets.toSeq.sorted.flatMap(b =>
-          m.get(b).map(v => dataPath(spark, dir, b, v)))
+        // each value hashes as the literal type `lit` infers — the
+        // writer's `pmod(xxhash64(lit(v), …), nb)`
+        val inLayout = keyBucketPred(decode, numBuckets(spark, dir, c.version),
+          tuples, partPos) { (t, modulus) =>
+          val hv = hashPos.map(_.map(t)).getOrElse(t)
+          graft.sources.MergeTableUtil.bucketOfTuple(hv, hv.map(v =>
+            org.apache.spark.sql.catalyst.expressions.Literal(v).dataType),
+            modulus)
+        }
+        m.toSeq.sortBy(_._1).collect {
+          case (b, v) if inLayout(b) => dataPath(spark, dir, b, v)
+        }
     }
 
   /** Point lookup: the current visible rows for `keys`, reading ONLY the
@@ -2919,7 +2940,13 @@ object MergeSink {
 
   /** Composite-key point lookup: tuples are key values in the `key`
     * list's declared order; the match is the AND of the columns'
-    * equalities, OR'd over the (bounded) tuple set.
+    * equalities, OR'd over the tuple set. The frame is a key-filtered
+    * `graft-merge` read of the head version: the source prunes to the
+    * tuples' buckets and hides tombstones, and a small lookup is
+    * answered on the driver (see [[graft.plans.DriverReadStrategy]]).
+    * A set over the source's tuple cap reads as a union of capped
+    * chunks, each bucket-bounded. Its schema is [[currentState]]'s:
+    * every column nullable.
     */
   def pointLookupTuples(
       spark: SparkSession,
@@ -2929,23 +2956,45 @@ object MergeSink {
     val kcols = keyCols(key)
     require(tuples.forall(_.size == kcols.size),
       s"pointLookup: each tuple needs ${kcols.size} values for keys $kcols")
-    val files = lookupFilesTuples(spark, dir, tuples, key)
-    if (files.isEmpty) None
-    else {
-      val cond =
-        if (kcols.size == 1) col(kcols.head).isin(tuples.map(_.head): _*)
-        else tuples
-          .map(t => kcols.zip(t).map { case (c, v) => col(c) === lit(v) }
-            .reduce(_ && _))
-          .reduce(_ || _)
-      val head = lastCommit(spark, dir).get // files nonEmpty => committed
-      val raw = currentViewAt(spark, dir, head.version,
-        bucketRead(spark, dir, head.version, files))
-        .filter(cond)
-      Some(
-        if (raw.columns.contains(DeletedCol))
-          raw.filter(!coalesce(col(DeletedCol), lit(false))).drop(DeletedCol)
-        else raw)
+    lastCommit(spark, dir).filter(_ => tuples.nonEmpty).flatMap { head =>
+      val read = spark.read.format("graft-merge")
+        .option("path", dir).option("key", key)
+        .option("versionAsOf", head.version.toString)
+        .load()
+      // the source takes an OR of per-tuple key equalities (an IN for a
+      // single key) as its exact tuple set; a balanced OR tree keeps the
+      // expression shallow for hundreds of tuples
+      def anyOf(cs: Seq[Column]): Column =
+        if (cs.size == 1) cs.head
+        else cs.splitAt(cs.size / 2) match { case (l, r) => anyOf(l) || anyOf(r) }
+      def matching(ts: Seq[Seq[Any]]): Column =
+        if (kcols.size == 1) col(kcols.head).isin(ts.map(_.head): _*)
+        else anyOf(ts.map(t => kcols.zip(t).map { case (c, v) =>
+          col(c) === lit(v) }.reduce(_ && _)))
+      val pinned = tuples.distinct
+        .grouped(graft.sources.GraftMergeScan.KeyTupleCap)
+        .map(ts => read.filter(matching(ts))).reduce(_ union _)
+      // [[currentState]]'s schema: every column nullable (the source
+      // declares identifier columns NOT NULL), and a column-mapped
+      // table's fields without their mapping metadata ([[currentView]]
+      // projects them afresh)
+      val mapped = columnAliases(read.schema).nonEmpty
+      val frame = pinned.select(read.schema.fields.toSeq.map { f =>
+        val c =
+          if (f.nullable) col(f.name)
+          else org.apache.spark.sql.graft.Exprs.column(
+            org.apache.spark.sql.catalyst.expressions.KnownNullable(
+              org.apache.spark.sql.graft.Exprs.expression(col(f.name))))
+        c.as(f.name,
+          if (mapped) org.apache.spark.sql.types.Metadata.empty else f.metadata)
+      }: _*)
+      // None when no key's bucket holds data: every scan planned no file
+      val planned = frame.queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation(_, s: graft.sources.GraftMergeScan, _, _, _) =>
+          s.fileCounts._1
+      }.sum
+      if (planned == 0) None else Some(frame)
     }
   }
 

@@ -77,6 +77,48 @@ class CatalogSpec extends SparkSpec {
     assert(got.sameElements(Array((7L, 3.5), (23L, 11.5))), got.toSeq.toString)
   }
 
+  test("SQL point read of a small table: no Spark job, no compiled class; a large one still scans") {
+    val cat = freshCatalog()
+    spark.sql(
+      s"""CREATE TABLE $cat.db.pt (k BIGINT, seq BIGINT, v DOUBLE)
+         |USING `graft-merge` OPTIONS (key 'k', seq 'seq')""".stripMargin)
+    spark.sql(s"INSERT INTO $cat.db.pt SELECT id, 1L, id * 0.5 FROM range(200)")
+    def point(k: Long) =
+      spark.sql(s"SELECT k, v FROM $cat.db.pt WHERE k = $k").collect()
+    // a first read compiles the row deserializer of this result schema
+    // once; every new key after it must compile nothing
+    assert(point(3L).map(_.getDouble(1)).toSeq == Seq(1.5))
+    val (rows, jobs, compiled) = jobsAndCompiles(point(41L))
+    assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      Seq((41L, 20.5)), rows.toSeq.toString)
+    assert(jobs == 0, s"SQL point read ran $jobs Spark jobs")
+    assert(compiled == 0, s"SQL point read compiled $compiled classes")
+    val plan = spark.sql(s"SELECT k, v FROM $cat.db.pt WHERE k = 7")
+      .queryExecution.executedPlan
+    assert(plan.collectFirst { case d: graft.plans.DriverReadExec => d }
+      .isDefined, plan.toString)
+    // above the size bound the same shape of read runs as a job: 64 keys
+    // across a table of incompressible payload
+    spark.sql(
+      s"""CREATE TABLE $cat.db.big (k BIGINT, seq BIGINT, a STRING, b STRING)
+         |USING `graft-merge` OPTIONS (key 'k', seq 'seq')""".stripMargin)
+    spark.sql(s"""INSERT INTO $cat.db.big SELECT id, 1L,
+                 |md5(CAST(id AS STRING)), sha1(CAST(id AS STRING))
+                 |FROM range(150000)""".stripMargin)
+    val big = spark.sql(
+      s"SELECT k, a FROM $cat.db.big WHERE k IN (${(0 until 64).mkString(", ")})")
+    val bigPlan = big.queryExecution.executedPlan
+    val scan = bigPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scan.isDefined, s"a key-pinned read above the bound:\n$bigPlan")
+    val planned = scan.get.scan.reportDriverMetrics()
+      .find(_.name() == "plannedBytes").get.value()
+    assert(planned > graft.sources.GraftMergeScan.DriverReadMaxBytes,
+      s"precondition: planned $planned bytes exceed the driver bound")
+    assert(big.collect().map(_.getLong(0)).sorted.toSeq == (0L until 64L))
+  }
+
   test("time travel via SQL VERSION AS OF") {
     val cat = freshCatalog()
     spark.sql(

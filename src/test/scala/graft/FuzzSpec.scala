@@ -353,4 +353,155 @@ class FuzzSpec extends SparkSpec {
   test(s"$Programs seeded random DML programs match the model") {
     for (p <- 0 until Programs) runProgram(p)
   }
+
+  // -------------------------------------------------------------------
+  // DRIVER-READ DIFFERENTIAL: a key-pinned read small enough for the
+  // driver path (graft.plans.DriverReadStrategy) must equal the
+  // distributed snapshot filtered the same way — rows, and the
+  // _version/_bucket/_file metadata of a non-pinned scan of the same
+  // version — over random upserts, tombstones, compaction, branches
+  // and an added column, on every layout, up to the 256-tuple cap.
+  // -------------------------------------------------------------------
+  private val DiffPrograms = 16
+
+  private def runDiffProgram(p: Int): Unit = {
+    val rnd = new Random(Seed0 + 10000 + p)
+    val dir = tmp(f"graft_fuzz_dr_$p%03d_")
+    MergeSink.setHistoryKeep(spark, dir, 4)
+    // (key, second key column, partition kind, bucket_by)
+    val (key, second, partKind, bucketBy) = rnd.nextInt(5) match {
+      case 0 => ("id", None, None, None)
+      case 1 => ("id,part", Some("part"), None, None)
+      case 2 => ("id,part", Some("part"), None, Some("id"))
+      case 3 => ("id,part", Some("part"), Some("identity"), None)
+      case _ => ("id,day", Some("day"), Some("day"), None)
+    }
+    partKind.foreach(k =>
+      MergeSink.setPartitionSpec(spark, dir, k, second.get, 2))
+    bucketBy.foreach(c => MergeSink.setBucketBy(spark, dir, Seq(c)))
+    def ctx(op: String): String =
+      s"driver-read program $p (seed ${Seed0 + 10000 + p}, key $key, " +
+        s"part $partKind, bucket_by $bucketBy) $op"
+    val day0 = java.time.LocalDate.parse("2024-01-01")
+    var noted = false
+    var rv = 0L
+    def frame(rows: Seq[(Long, Long)], deleted: Boolean): DataFrame = {
+      val s = spark
+      import s.implicits._
+      var df = rows.map { case (id, x) => (id, x, rv, deleted) }
+        .toDF("id", "x", "rv", MergeSink.DeletedCol)
+      if (!deleted) df = df.drop(MergeSink.DeletedCol)
+      second.foreach {
+        case "part" => df = df.withColumn("part", (col("id") % 3).cast("int"))
+        case _ => df = df.withColumn("day", date_add(
+          lit(java.sql.Date.valueOf(day0)), (col("id") % 3).cast("int")))
+      }
+      if (noted) df.withColumn("note", concat(lit("n"), col("x").cast("string")))
+      else df
+    }
+    def upsert(d: String, rows: Seq[(Long, Long)], deleted: Boolean): Unit = {
+      rv += 1
+      MergeSink.upsertBatch(frame(rows, deleted), d, key, "rv", rv, "dr",
+        reRegister = true)
+    }
+    def randomRows(n: Int): Seq[(Long, Long)] =
+      Seq.fill(n)((rnd.nextInt(300).toLong, rnd.nextInt(1000).toLong))
+        .groupBy(_._1).map(_._2.last).toSeq
+
+    /** The same read, key-pinned (driver) and not (distributed). */
+    def probe(d: String, what: String): Unit = {
+      val cap = if (second.isEmpty) 256 else 256 / 3
+      // mostly within the cap; sometimes one past it (no key pinning)
+      val n = if (rnd.nextInt(6) == 0) cap + 1 else 1 + rnd.nextInt(cap)
+      val ids = Seq.fill(n)(rnd.nextInt(320).toLong).distinct
+      val retained = MergeSink.commits(spark, d).map(_.version)
+      val asOf =
+        if (retained.size > 1 && rnd.nextBoolean())
+          Some(retained(rnd.nextInt(retained.size - 1)))
+        else None
+      val reader = spark.read.format("graft-merge")
+        .option("path", d).option("key", key)
+      val src = asOf.fold(reader)(v =>
+        reader.option("versionAsOf", v.toString)).load()
+      // the second key column takes every value its derivation yields
+      val secondIn = second.map {
+        case "part" => " AND part IN (0, 1, 2)"
+        case c => s" AND $c IN (" +
+          (0 until 3).map(i => s"DATE'${day0.plusDays(i)}'").mkString(", ") + ")"
+      }.getOrElse("")
+      // or, on a composite key, the exact tuples as an OR of per-tuple
+      // equalities (balanced, so the tree stays shallow)
+      val asTuples = second.isDefined && rnd.nextBoolean()
+      def secondOf(id: Long): String = second.get match {
+        case "part" => s"part = ${id % 3}"
+        case c => s"$c = DATE'${day0.plusDays(id % 3)}'"
+      }
+      def anyOf(ts: Seq[String]): String =
+        if (ts.size == 1) ts.head
+        else ts.splitAt(ts.size / 2) match {
+          case (l, r) => s"(${anyOf(l)}) OR (${anyOf(r)})"
+        }
+      val dataCols = src.columns.toSeq
+      val meta = Seq("_version", "_bucket", "_file")
+      val pinned = src.where(
+        if (asTuples) anyOf(ids.map(id => s"id = $id AND ${secondOf(id)}"))
+        else s"id IN (${ids.mkString(", ")})$secondIn")
+        .select((dataCols ++ meta).map(col): _*)
+      // the same predicate, unrecognizable as key pinning
+      val spread = src.filter(col("id").cast("string")
+        .isin(ids.map(_.toString): _*))
+        .select((dataCols ++ meta).map(col): _*)
+      val plan = pinned.queryExecution.executedPlan
+      val onDriver = plan.collectFirst {
+        case x: graft.plans.DriverReadExec => x }.isDefined
+      assert(onDriver ==
+        (ids.size * (if (second.isEmpty || asTuples) 1 else 3) <= 256),
+        s"${ctx(what)}: ${ids.size} ids, driver path $onDriver:\n$plan")
+      val got = pinned.collect().toSet
+      assert(got == spread.collect().toSet,
+        s"${ctx(what)}: driver read differs from the distributed scan")
+      // a version older than the added column lacks it in the snapshot
+      // (the source serves it as NULL): compare the snapshot's columns
+      val snapshot = asOf.fold(MergeSink.currentState(spark, d))(v =>
+        MergeSink.stateAt(spark, d, v))
+      val common = dataCols.filter(c => snapshot.forall(_.columns.contains(c)))
+      val want = snapshot.map(_.filter(col("id").isin(ids: _*))
+        .select(common.map(col): _*).collect().toSet)
+        .getOrElse(Set.empty)
+      assert(got.map(r => org.apache.spark.sql.Row(
+        common.map(c => r.get(dataCols.indexOf(c))): _*)) == want,
+        s"${ctx(what)}: driver read differs from the snapshot")
+    }
+
+    upsert(dir, randomRows(40), deleted = false)
+    for (step <- 0 until 6 + rnd.nextInt(4)) {
+      rnd.nextInt(6) match {
+        case 0 | 1 => upsert(dir, randomRows(1 + rnd.nextInt(40)), false)
+        case 2 => // tombstones, absent keys included
+          upsert(dir, Seq.fill(1 + rnd.nextInt(10))(
+            (rnd.nextInt(320).toLong, 0L)).distinct, deleted = true)
+        case 3 => MergeSink.compact(spark, dir, key, 1 + rnd.nextInt(4))
+        case 4 => // branch, write there, read both, fast-forward back
+          val dev = tmp(f"graft_fuzz_drbr_$p%03d_")
+          MergeSink.branchTable(spark, dir, dev)
+          MergeSink.setHistoryKeep(spark, dev, 4)
+          upsert(dev, randomRows(1 + rnd.nextInt(10)), false)
+          probe(dev, s"step $step branch")
+          MergeSink.fastForward(spark, dir, dev)
+        case _ =>
+          if (!noted) {
+            MergeSink.addColumns(spark, dir, Seq(
+              org.apache.spark.sql.types.StructField(
+                "note", org.apache.spark.sql.types.StringType)))
+            noted = true
+          }
+          upsert(dir, randomRows(1 + rnd.nextInt(10)), false)
+      }
+      probe(dir, s"step $step")
+    }
+  }
+
+  test(s"$DiffPrograms seeded tables: key-pinned driver reads match the distributed snapshot") {
+    for (p <- 0 until DiffPrograms) runDiffProgram(p)
+  }
 }

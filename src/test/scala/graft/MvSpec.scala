@@ -417,6 +417,30 @@ class MvSpec extends SparkSpec {
     assert(viewState(mv, sumAggs) == fullAgg(src, sumAggs))
   }
 
+  test("full rebuild returns the committed view's row count, with and without a vanished group") {
+    val src = tmp("mv_fr_src")
+    val mv = tmp("mv_fr_v")
+    MergeSink.upsertBatch(df(Seq((1L, 0L, 10L), (2L, 1L, 20L), (3L, 2L, 30L)), 1L),
+      src, "id", "rv", 0L, "load")
+    // the first refresh is a full rebuild
+    assert(MaterializedViews.refreshDir(
+      spark, src, "id", mv, Seq("grp"), sumAggs, "algebraic") == 3L)
+    assert(MergeSink.currentState(spark, mv).get.count() == 3L)
+    // group 1 vanishes, then the applied version leaves the source's
+    // retention window: the next refresh rebuilds without it
+    MergeSink.upsertBatch(df(Seq((2L, 1L, 20L)), 2L)
+      .withColumn(MergeSink.DeletedCol, lit(true)), src, "id", "rv", 1L, "load")
+    MergeSink.upsertBatch(df(Seq((4L, 3L, 40L)), 3L), src, "id", "rv", 2L, "load")
+    MergeSink.upsertBatch(df(Seq((5L, 3L, 50L)), 4L), src, "id", "rv", 3L, "load")
+    assert(!MergeSink.commits(spark, src).exists(_.version == 0L),
+      "precondition: v0 must have been GC'd")
+    val g = MaterializedViews.refreshDir(
+      spark, src, "id", mv, Seq("grp"), sumAggs, "algebraic")
+    assert(g == 3L, s"groups 0, 2 and 3 remain: returned $g")
+    assert(g == MergeSink.currentState(spark, mv).get.count())
+    assert(viewState(mv, sumAggs) == fullAgg(src, sumAggs))
+  }
+
   test("catalog surface: create_mv/refresh_mv procedures end to end") {
     val cat = "mvspec"
     val wh = tmp("mv_cat_wh")
@@ -776,32 +800,10 @@ class MvSpec extends SparkSpec {
     assert(registered().isEmpty, s"ghost registrations: ${registered()}")
   }
 
-  /** Spark jobs `op` starts on this thread: a listener tags each job by
-    * its job group, and a fence job run after `op` marks when every
-    * earlier job start has reached it (the bus delivers in order).
-    */
+  /** Spark jobs `op` starts on this thread (see [[jobsAndCompiles]]). */
   private def jobsOf[T](op: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("mvspec-op", "counted")
-      val out = try op finally sc.clearJobGroup()
-      sc.setJobGroup("mvspec-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!groups.contains("mvspec-fence") &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20L)
-      assert(groups.contains("mvspec-fence"), "listener never saw the fence job")
-      (out, groups.toArray.count(_ == "mvspec-op"))
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs, _) = jobsAndCompiles(op)
+    (out, jobs)
   }
 
   test("one-pass algebraic refresh: few jobs, untouched view buckets keep their files") {
