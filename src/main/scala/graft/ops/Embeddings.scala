@@ -1405,8 +1405,10 @@ object Embeddings {
   //
   // Scale: codebooks are O(M·k) = 512 centroid rows (broadcast model);
   // per-query distance tables are O(M·k) = 512 rows (broadcast); encode
-  // and ADC each scan the long-form collection ONCE with map-side
-  // partial aggregation; nothing driver-side grows with N.
+  // is a narrow projection of the collection, but whole-stage codegen
+  // emits it inside the broadcast nested-loop join's per-query loop, so
+  // it runs once per (candidate, query) pair, as does ADC's M lookups;
+  // nothing driver-side grows with N.
   // ---------------------------------------------------------------------
   // 16 subspaces × 4 dims × 32 entries = 80-bit codes. Parameters are
   // MEASURED, not assumed (the q_ann_recall discipline): on this
@@ -1448,15 +1450,16 @@ object Embeddings {
     * a lambda. HOFs evaluate interpreted, re-running their lambda body
     * per element: with the round() transform nested inside the per-
     * entry distance lambdas, each row re-quantized the full vector
-    * M·k·2 times through BigDecimal (measured: one sf0.001 training
-    * task burned 53 s of CPU). As the HOF input it evaluates exactly
-    * once per row — dim BigDecimal roundings, then pure long math.
+    * M·k·2 times (measured: one sf0.001 training task burned 53 s of
+    * CPU). As the HOF input it evaluates exactly once per row — dim
+    * roundings, then pure long math.
     */
   private def xqSubs(v: Column, input: String): Column = {
     // native since round 17 (graft.plans.PqQuantSubsExpr): the HOF
-    // transform×transform ran 64 interpreted BigDecimal roundings per
-    // row through boxed lambdas; the expression runs the identical
-    // Spark-Round-exact arithmetic as a primitive loop.
+    // transform×transform ran 64 interpreted Spark roundings (each a
+    // Double.toString + BigDecimal) per row through boxed lambdas; the
+    // expression gets the identical Spark-Round-exact longs from exact
+    // double arithmetic (graft.plans.PqOps.quant) in a primitive loop.
     import org.apache.spark.sql.graft.Exprs
     Exprs.column(graft.plans.PqQuantSubsExpr(
       Exprs.expression(v), kmQ.toDouble, pqM, pqDsub, input))
@@ -1611,7 +1614,8 @@ object Embeddings {
   val similarityPq: Q = (s, d) => {
     val m = pqLitModel(s, d)
     // encoded collection: ONE narrow projection (vec_id, 16 codes) —
-    // the 80-bit-codes-instead-of-256-byte-vectors scan
+    // the 80-bit-codes-instead-of-256-byte-vectors scan, evaluated once
+    // per (candidate, query) pair inside the join below, not per vector
     val enc = checked(s, d)
       .select(
         col("vec_id").as("neighbor_id"),

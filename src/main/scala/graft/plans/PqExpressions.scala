@@ -19,26 +19,29 @@ import org.apache.spark.sql.types._
   * arithmetic as tight primitive loops.
   *
   * VALUE CONTRACT (bit-identical to the HOF forms, oracle-pinned):
-  *  - quantization = Spark `round(x.cast(double) * q).cast(long)`:
-  *    `java.math.BigDecimal.valueOf(d).setScale(0, HALF_UP)`, then a
-  *    double→long truncating cast — replicated exactly, including the
-  *    NaN/Infinity passthrough of Spark's Round.
+  *  - quantization = Spark `round(x.cast(double) * q).cast(long)`,
+  *    which rounds HALF_UP on the decimal string of the double and
+  *    then truncates to long. [[PqOps.quant]] gets the same long from
+  *    exact double arithmetic (see its scaladoc for why), including
+  *    the NaN/Infinity passthrough of Spark's Round.
   *  - per-subspace distance = Σ (xq − cq)² in longs (exact, order-free).
   *  - encode argmin: entries iterated in ascending entry-id order,
   *    STRICT less — ties keep the smallest id (pqEncode's fold).
   *  - ADC score = Σ_s dtab[s·k + codes[s]] in longs.
   *
   * Null contract: standard null-intolerant expressions (NULL in → NULL
-  * out); array ELEMENTS must be non-null, as everywhere in the
-  * embedding path.
+  * out); a NULL array ELEMENT is rejected loudly by [[PqOps.checkDim]]
+  * (a plain element read would decode it as 0.0f).
   */
 object PqOps {
   /** A wrong-dimension vector — a user's query panel or a corrupt
     * stored embedding — must raise a descriptive error, not an
     * ArrayIndexOutOfBoundsException from generated code (or a silent
-    * garbage read). `input` names what the vector is (the expression's
+    * garbage read). So must a NULL component, which `getFloat` would
+    * read as 0.0f. `input` names what the vector is (the expression's
     * caller knows: "query vector", "stored embedding"). One integer
-    * compare per ROW — noise next to the M×k×dsub loops it guards.
+    * compare and m·dsub null-bit reads per ROW — noise next to the
+    * M×k×dsub loops it guards.
     */
   def checkDim(v: ArrayData, m: Int, dsub: Int, op: String, input: String): Unit = {
     val n = v.numElements()
@@ -46,18 +49,41 @@ object PqOps {
       throw new IllegalArgumentException(
         s"$op: wrong-dimension $input: $n components, the PQ model " +
           s"expects ${m * dsub} (m=$m subspaces x dsub=$dsub)")
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"$op: NULL component at position $i of the $input " +
+            s"($n components)")
+      i += 1
+    }
   }
 
-  /** Spark-Round-exact quantization of one float component. */
+  private final val TwoPow52 = 4503599627370496.0 // 2^52
+
+  /** Spark-Round-exact quantization of one float component:
+    * `round(x.toDouble * q).toLong` as Spark computes it, which is
+    * HALF_UP rounding of the decimal string `Double.toString(d)`.
+    *
+    * That string is a decimal that reads back as `d`, so it lies inside
+    * `d`'s own rounding interval. For |d| < 2^52 every `k + 0.5` is an
+    * exactly representable double, hence it is `d` itself or lies
+    * outside that interval: the string can never land on or cross the
+    * tie that separates two HALF_UP results, and HALF_UP of the string
+    * equals HALF_UP of the exact `d`. Below 2^52, `floor`, `a − floor(a)`
+    * and `floor + 1` are all exact, so the branch below computes that
+    * exact HALF_UP with no string. At |d| ≥ 2^52 `d` is already an
+    * integer; NaN and ±Inf pass through Spark's Round unchanged; all
+    * three end in the same truncating `toLong`.
+    */
   def quant(x: Float, q: Double): Long = {
     val d = x.toDouble * q
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d.toLong
-    else
-      java.math.BigDecimal
-        .valueOf(d)
-        .setScale(0, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-        .toLong
+    val a = math.abs(d)
+    if (a < TwoPow52) {
+      val f = math.floor(a)
+      val r = if (a - f >= 0.5) f + 1.0 else f
+      (if (d < 0) -r else r).toLong
+    } else d.toLong
   }
 }
 

@@ -141,6 +141,118 @@ class VecExprSpec extends SparkSpec {
         Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("wrong-dimension query vector: 7 components")),
       s"expected a dimension error naming the input, got: $e")
+
+    // a NULL component would read as 0.0f through getFloat: every PQ
+    // expression must reject it, naming the input and the position
+    val withNull = Seq((1L, Seq(Some(0.5f), Some(0.25f), None, Some(1.0f))))
+      .toDF("id", "v")
+    val v = Exprs.expression(col("v"))
+    val cq = Array.fill(2, 1, 2)(0L) // m=2 subspaces x 1 entry x dsub=2
+    for (pq <- Seq(
+        graft.plans.PqQuantSubsExpr(v, 1000.0, 2, 2, "stored embedding"),
+        graft.plans.PqEncodeExpr(v, cq, Array.fill(2, 1)(0), 1000.0, 2, "stored embedding"),
+        graft.plans.PqDtabExpr(v, cq, 1000.0, 2, "stored embedding"))) {
+      val n = intercept[Exception] { withNull.select(Exprs.column(pq)).collect() }
+      assert(messages(n).exists(_.contains(
+        "NULL component at position 2 of the stored embedding")),
+        s"${pq.prettyName}: expected a NULL-component error, got: $n")
+    }
+  }
+
+  /** Today's reference form of the quantization, kept here as an
+    * independent oracle for [[graft.plans.PqOps.quant]]: HALF_UP on the
+    * decimal string of the double (what Spark's Round does), then a
+    * truncating cast.
+    */
+  private def quantRef(x: Float, q: Double): Long = {
+    val d = x.toDouble * q
+    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d.toLong
+    else
+      java.math.BigDecimal.valueOf(d)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+  }
+
+  /** Components whose product with `q` is exactly k + 0.5 (where a float
+    * allows it) or one float ulp either side, plus the IEEE edges.
+    */
+  private def tieFloats(q: Double): Seq[Float] = {
+    val ties = (0 until 300).flatMap { i =>
+      val k = i.toLong * i * 37 + i // spread k over a wide range
+      val x = ((k + 0.5) / q).toFloat
+      Seq(x, Math.nextUp(x), Math.nextDown(x)).flatMap(f => Seq(f, -f))
+    }
+    // j/2 for odd j: x·3 = 1.5j, an exact tie at q = 3
+    val halves = (1 until 200 by 2).flatMap(j => Seq(j / 2.0f, -j / 2.0f))
+    val edges = Seq(0.0f, -0.0f, Float.MinPositiveValue, -Float.MinPositiveValue,
+      java.lang.Float.MIN_NORMAL / 2, -java.lang.Float.MIN_NORMAL / 2,
+      Float.MaxValue, Float.MinValue, Float.NaN,
+      Float.PositiveInfinity, Float.NegativeInfinity)
+    ties ++ halves ++ edges
+  }
+
+  test("PqOps.quant == the BigDecimal string-rounding form over 1M+ float bit patterns") {
+    val rnd = new scala.util.Random(20260817)
+    val sweep = Array.fill(1 << 20)(java.lang.Float.intBitsToFloat(rnd.nextInt()))
+    for (q <- Seq(1048576.0, 3.0, 1.0, 1000.0, 0.1, 1e6, 12345.678)) {
+      val xs = sweep.iterator ++ tieFloats(q).iterator
+      var exactTies = 0
+      xs.foreach { x =>
+        val d = x.toDouble * q
+        if (d - math.floor(d) == 0.5) exactTies += 1
+        val got = graft.plans.PqOps.quant(x, q)
+        val want = quantRef(x, q)
+        assert(got == want,
+          s"q=$q x=$x (bits ${java.lang.Float.floatToRawIntBits(x)}): $got != $want")
+      }
+      // 2^20 (x = (k + 0.5)/2^20), 3 and 1 (x = j/2) admit exact ties by construction
+      if (q == 1048576.0 || q == 3.0 || q == 1.0)
+        assert(exactTies > 0, s"q=$q: no exact k + 0.5 product was exercised")
+    }
+  }
+
+  test("PqQuantSubsExpr, flattened == Spark transform(round(x * q)), codegen and interpreted") {
+    import org.apache.spark.sql.graft.Exprs
+    val s = spark
+    import s.implicits._
+    val (m, dsub) = (4, 4)
+    val dim = m * dsub
+    for (q <- Seq(1048576.0, 3.0)) {
+      val rnd = new scala.util.Random(q.toLong)
+      val special = tieFloats(q)
+      val vecs = (0 until 200).map(_ => Array.fill(dim)(rnd.nextGaussian().toFloat)) ++
+        special.grouped(dim).map(g => g.toArray.padTo(dim, 0.0f))
+      // an RDD source, not a local relation: the optimizer would fold a
+      // literal row's projection and no codegen stage would run
+      val df = spark.sparkContext
+        .parallelize(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }, 2)
+        .toDF("id", "v")
+      val fast = flatten(Exprs.column(graft.plans.PqQuantSubsExpr(
+        Exprs.expression(col("v")), q, m, dsub, "stored embedding")))
+      // the kernel's contract ends in a truncating toLong: the non-ANSI cast
+      val ref = transform(col("v"), x => round(x.cast("double") * lit(q)).cast("long"))
+      def collectWith(conf: (String, String)*): Map[Long, (Seq[Long], Seq[Long])] = {
+        val keys = conf.map(_._1) :+ "spark.sql.ansi.enabled"
+        val before = keys.map(k => k -> spark.conf.getOption(k))
+        (conf :+ ("spark.sql.ansi.enabled" -> "false")).foreach { case (k, v) =>
+          spark.conf.set(k, v)
+        }
+        try df.select(col("id"), fast.as("fast"), ref.as("ref")).collect()
+          .map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getSeq[Long](2))).toMap
+        finally before.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+      val gen = collectWith()
+      val interp = collectWith(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      assert(gen.size == vecs.length && interp.size == vecs.length)
+      for ((mode, out) <- Seq("codegen" -> gen, "interpreted" -> interp);
+           (id, (f, r)) <- out)
+        assert(f == r, s"q=$q $mode id $id: ${f.mkString(",")} != ${r.mkString(",")}")
+      assert(gen.keys.forall(id => gen(id)._1 == interp(id)._1))
+    }
   }
 
   test("JaccardGE == rearranged array_intersect threshold on random sorted sets") {
