@@ -110,46 +110,30 @@ object Bench {
         s""""cpus":$localN}"""
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",$cond}"""
-    // The driver's bounded stdout-tail capture has truncated the long
-    // per-query line EVERY round (`parsed: null`, ~79 of 216 entries
-    // retained) — so the complete artifact is also WRITTEN to a file,
-    // making the bench self-contained regardless of capture limits.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_full.json")
+    // The per-query line is too long for a bounded stdout-tail capture,
+    // so it goes to a file only. The default name carries the checkout's
+    // short commit, so two commits' artifacts sit side by side for
+    // `tools/ab.py --bench`; a tree with uncommitted or untracked files
+    // adds `-dirty`, so its run never takes the clean commit's name.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
+      import scala.sys.process._
+      def git(args: String*): String = ("git" +: args).!!(ProcessLogger(_ => ())).trim
+      val sha =
+        try {
+          val dirty = if (git("status", "--porcelain").nonEmpty) "-dirty" else ""
+          "-" + git("rev-parse", "--short=12", "HEAD") + dirty
+        } catch { case _: Exception => "" }
+      s"target/bench_full$sha.json"
+    })
     try {
       val p = java.nio.file.Paths.get(outPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      // OVERWRITE GUARD: a later, load-contaminated run must not replace
-      // a quieter (sealing) artifact — the round-10/11 discipline gap
-      // where "the last run wins" buried the representative number. A
-      // NOISIER run (higher start load than recorded, beyond a 1.0
-      // tolerance) diverts to a sibling path; a quieter-or-similar run
-      // replaces as before. SPARK_GRAFT_BENCH_FORCE=1 overrides.
-      val target: java.nio.file.Path =
-        if (!java.nio.file.Files.exists(p) ||
-          sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")) p
-        else {
-          val prior = new String(
-            java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val re = """"load_avg_start":([0-9.]+)""".r
-          val priorLoad = re.findFirstMatchIn(prior).map(_.group(1).toDouble)
-          val cur = math.max(startLoadAvg, 0.0)
-          priorLoad match {
-            case Some(q) if cur > q + 1.0 =>
-              p.resolveSibling(p.getFileName.toString
-                .replaceAll("\\.json$", "") + "_loaded.json")
-            case _ => p
-          }
-        }
-      java.nio.file.Files.write(target, (full + "\n").getBytes("UTF-8"))
-      println(s"""{"metric":"bench_file","path":"$target","n_queries":${results.size}}""")
+      java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
+      println(s"""{"metric":"bench_file","path":"$p","n_queries":${results.size}}""")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] write $outPath failed: ${e.getMessage}")
     }
-    // Bracket the long per-query line with the SHORT summary on both sides:
-    // whichever end of the stream the driver's capture keeps, one complete
-    // parseable line survives.
-    println(summary)
-    println(full)
+    // the short summary stays the LAST stdout line
     println(summary)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -11,9 +11,25 @@ import org.apache.spark.sql.types._
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   *
   * Each table is one parquet file per scale-factor directory. All reads go
-  * through [[Tables.load]] so every query in the engine benefits from
-  * Catalyst's parquet pushdown (PushedFilters / ReadSchema pruning) — the
-  * scan is declared lazily and the optimizer prunes columns per query.
+  * through [[Tables.readParquet]], which the engine also uses for the
+  * other parquet paths it reads again unchanged (ANN index sidecars,
+  * saved ANN models); `ReadParquetSpec`'s source guard fails on any other
+  * schema-less read not on its allow-list. The scan is declared lazily,
+  * so Catalyst prunes columns and pushes filters per query. Spark infers
+  * a schema-less read's schema in a one-task job that reads a footer;
+  * `readParquet` caches the schema it inferred under a key of the root
+  * paths, every leaf file Spark's file index would list under them as
+  * (path, length, mtime), and the session confs that steer parquet
+  * inference (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`, case
+  * sensitivity, partition type inference, timestamp type and zone). A
+  * hit hands that schema back through `read.schema(...)`, which runs no
+  * job and reads no footer. It is exact: the schema is Spark's own
+  * inference over the same files under the same confs, and it is cached
+  * only when the schema-given read resolves to exactly the inferred
+  * schema. Any rewrite, added or removed file or conf change is a new
+  * key; a rewrite that keeps a file's length and lands within the
+  * filesystem's mtime granularity is the one change the key cannot see,
+  * as with Spark's own file-status cache.
   *
   * PHYSICAL-SCHEMA ADAPTATION: timestamp units are read from the parquet
   * FOOTER, never assumed. A real lake mixes MICROS and NANOS files, and
@@ -21,8 +37,9 @@ import org.apache.spark.sql.types._
   * NANOS; round 9: MICROS) — assuming the unit turned that physical change
   * into 30 silently-wrong query results in round 8. Every timestamp-bearing
   * table (events, orders, lineitem) now goes through [[loadAdaptive]]: one
-  * cached driver-side footer probe (O(KB) metadata I/O — the same pattern a
-  * 1000-executor job uses), and per-column decode-path selection. The
+  * driver-side footer probe, cached by the same file listing (O(KB)
+  * metadata I/O — the same pattern a 1000-executor job uses), and
+  * per-column decode-path selection. The
   * reference derives block size from the file manager's own config instead
   * of hardcoding it (/root/reference/src/opusdb/io/file_mgr.clj:48-50); the
   * analogous discipline here is "ask the footer".
@@ -33,39 +50,133 @@ import org.apache.spark.sql.types._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
 
   // -------------------------------------------------------------------
-  // Footer probe: EVERY data file's parquet MessageType per path per JVM
-  // — a real lake mixes files written under different producer versions,
-  // so one file's footer does not speak for the directory. Driver-side
-  // O(files) metadata reads, cached; the same listing a compaction or
-  // planning pass already does.
+  // Schema-less parquet reads. Without a schema, `read.parquet` infers
+  // one in a one-task Spark job that reads a footer
+  // (SchemaMergeUtils.mergeSchemasInParallel), about 30 ms per read of
+  // an unchanged fixture. The engine does that read through
+  // [[readParquet]], which remembers the schema Spark inferred and,
+  // while the key below is unchanged, hands it back to Spark instead.
   // -------------------------------------------------------------------
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, MessageType)]]()
 
+  /** The files one read covers: its root paths (in the caller's order,
+    * which picks Spark's inference file) and every leaf file Spark's file
+    * index would list under them as (path, length, mtime), sorted.
+    */
+  private final case class FileSet(roots: Seq[String], files: Seq[(String, Long, Long)])
+
+  /** A schema-less read's inference inputs: the files and the session
+    * confs that steer parquet schema inference.
+    */
+  private final case class SchemaKey(files: FileSet, confs: Seq[(String, String)])
+
+  private val SchemaCacheEntries = 256
+  private val FooterCacheEntries = 64
+
+  private def lru[K, V](capacity: Int): java.util.LinkedHashMap[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size > capacity
+    }
+
+  private val schemaCache = lru[SchemaKey, StructType](SchemaCacheEntries)
+  private val footerCache = lru[Seq[(String, Long, Long)], Seq[(String, MessageType)]](
+    FooterCacheEntries)
+
+  /** Names Spark's file index skips (HadoopFSUtils.shouldFilterOutPathName):
+    * `_`/`.`-prefixed names other than partition directories and parquet
+    * summary files, and in-flight `._COPYING_` copies.
+    */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !isSummaryFile(name)
+
+  private def isSummaryFile(name: String): Boolean =
+    name.startsWith("_common_metadata") || name.startsWith("_metadata")
+
+  /** One driver listing of `roots` (globs expanded as Spark expands
+    * them); None when a root matches nothing, so the caller's read
+    * raises Spark's own error.
+    */
+  private def listFiles(spark: SparkSession, roots: Seq[String]): Option[FileSet] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hiddenName(c.getPath.getName))
+        .flatMap(leaves(fs, _))
+    val perRoot = roots.map { r =>
+      val p = new Path(r)
+      val fs = p.getFileSystem(conf)
+      Option(fs.globStatus(p)).filter(_.nonEmpty).map(_.toSeq.flatMap(leaves(fs, _)))
+    }
+    if (perRoot.contains(None)) None
+    else Some(FileSet(roots, perRoot.flatten.flatten
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sorted))
+  }
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.iterator.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive" ||
+        k == "spark.sql.sources.partitionColumnTypeInference.enabled" ||
+        k == "spark.sql.timestampType" || k == "spark.sql.session.timeZone"
+    }.toSeq.sorted
+
+  /** Spark's schema-less parquet read of `paths`, without its
+    * schema-inference job when these files were read before under the
+    * same inference confs. On a miss Spark infers as usual; the schema is
+    * kept only when a read given it resolves to exactly the inferred
+    * schema, so a hit plans the same relation a miss would. A miss pays
+    * one more listing and resolution than a plain read, so this is for
+    * paths read again unchanged: the fixtures, and index and model
+    * artifacts served many times. A path written just before each read
+    * stays on Spark's own read.
+    */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    listFiles(spark, paths) match {
+      case Some(files) => readListed(spark, files)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def readListed(spark: SparkSession, files: FileSet): DataFrame = {
+    val key = SchemaKey(files, inferenceConfs(spark))
+    def given(schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(files.roots: _*)
+    schemaCache.synchronized(Option(schemaCache.get(key))) match {
+      case Some(schema) => given(schema)
+      case None =>
+        val df = spark.read.parquet(files.roots: _*)
+        if (given(df.schema).schema == df.schema)
+          schemaCache.synchronized(schemaCache.put(key, df.schema))
+        df
+    }
+  }
+
+  // -------------------------------------------------------------------
+  // Footer probe: EVERY data file's parquet MessageType — a real lake
+  // mixes files written under different producer versions, so one
+  // file's footer does not speak for the directory. Driver-side
+  // O(files) metadata reads, cached by the same file listing
+  // [[readParquet]] keys on: a rewritten, added or removed file is a
+  // new key, so a path rewritten in another timestamp unit is re-probed.
+  // -------------------------------------------------------------------
   private def footerSchemas(
       spark: SparkSession,
-      path: String): Seq[(String, MessageType)] =
-    footerCache.computeIfAbsent(path, { key: String =>
+      files: FileSet): Seq[(String, MessageType)] =
+    footerCache.synchronized(Option(footerCache.get(files.files))).getOrElse {
       // the cache outlives any one session: read under the context's
       // conf, not a per-call copy of this session's
       val conf = spark.sparkContext.hadoopConfiguration
-      val root = new Path(key)
-      val fs = root.getFileSystem(conf)
-      val dataFiles =
-        if (fs.getFileStatus(root).isFile) Seq(root)
-        else fs.listStatus(root).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-          .toSeq
-      dataFiles.map { p =>
-        p.toString -> ParquetFooters.read(p, conf).getFileMetaData.getSchema
-      }
-    })
-
-  private def footerSchema(spark: SparkSession, path: String): MessageType =
-    footerSchemas(spark, path).head._2
+      val footers = files.files.map(_._1)
+        .filterNot(f => isSummaryFile(new Path(f).getName))
+        .map(f => f -> ParquetFooters.read(new Path(f), conf).getFileMetaData.getSchema)
+      footerCache.synchronized(footerCache.put(files.files, footers))
+      footers
+    }
 
   private def tsAnnotation(
       f: PrimitiveType): Option[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] =
@@ -73,20 +184,6 @@ object Tables {
       case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation => Some(t)
       case _ => None
     }
-
-  /** Physical timestamp unit of one column, from the footer. Columns with
-    * no timestamp annotation report MICROS (Spark's native reader handles
-    * them directly).
-    */
-  private[graft] def tsUnit(
-      spark: SparkSession,
-      path: String,
-      column: String): TimeUnit = {
-    val schema = footerSchema(spark, path)
-    tsAnnotation(schema.getType(schema.getFieldIndex(column)).asPrimitiveType())
-      .map(_.getUnit)
-      .getOrElse(TimeUnit.MICROS)
-  }
 
   /** Spark field for one flat parquet primitive, with NANOS timestamps
     * typed LONG (the vectorized reader rejects TIMESTAMP(NANOS); the raw
@@ -132,7 +229,8 @@ object Tables {
     * mantissa: ns since epoch ≈ 1.7e18 > 2^53), then presented with the
     * same Spark type the native reader gives the MICROS form of the file
     * (NTZ unless adjusted-to-UTC). When no NANOS column exists anywhere
-    * the read is Spark's untouched native path.
+    * the read is Spark's native path through [[readParquet]], keyed by
+    * the same listing as the footer probe.
     *
     * MIXED directories — some files MICROS, some NANOS, the normal state
     * of a lake whose producer upgraded mid-history — are handled by
@@ -147,7 +245,8 @@ object Tables {
       name: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val path = s"$dir/$name.parquet"
-    val footers = footerSchemas(spark, path)
+    val listed = listFiles(spark, Seq(path))
+    val footers = listed.map(footerSchemas(spark, _)).getOrElse(Nil)
     require(footers.nonEmpty, s"loadAdaptive: no parquet data files under $path")
     def nanosColsOf(schema: MessageType): Seq[PrimitiveType] =
       schema.getFields.asScala.map(_.asPrimitiveType())
@@ -164,9 +263,11 @@ object Tables {
       if (nanosCols.isEmpty)
         // native path; when the whole dir is one homogeneous group this
         // is exactly the plain table read
-        if (paths.toSet == Set(path) || groups.size == 1)
-          spark.read.parquet(path)
-        else spark.read.parquet(paths: _*)
+        if (groups.size == 1) readListed(spark, listed.get)
+        else {
+          val group = paths.toSet
+          readListed(spark, FileSet(paths, listed.get.files.filter(f => group(f._1))))
+        }
       else {
         val fields = schema.getFields.asScala.map(_.asPrimitiveType())
         val readSchema = StructType(fields.map(sparkField).toSeq)
@@ -207,7 +308,9 @@ object Tables {
   private[graft] def eventsTsUnit(spark: SparkSession, dir: String): TimeUnit = {
     import scala.jdk.CollectionConverters._
     val path = s"$dir/events.parquet"
-    val units = footerSchemas(spark, path).map { case (file, schema) =>
+    val footers = listFiles(spark, Seq(path)).map(footerSchemas(spark, _)).getOrElse(Nil)
+    require(footers.nonEmpty, s"eventsTsUnit: no parquet data files under $path")
+    val units = footers.map { case (file, schema) =>
       val u = tsAnnotation(
         schema.getType(schema.getFieldIndex("ts")).asPrimitiveType())
         .map(_.getUnit)

@@ -1865,12 +1865,12 @@ object Embeddings {
   private def loadIvfCentroids(s: SparkSession, path: String): DataFrame =
     kmMaterialize(
       s,
-      s.read.parquet(s"$path/ivf_centroids")
+      Tables.readParquet(s, s"$path/ivf_centroids")
         .select(col("cent_id"), col("cv"), col("cnrm2"))
         .orderBy(col("cent_id")))
 
   private def loadPqModel(s: SparkSession, path: String): PqLitModel = {
-    val rows = s.read.parquet(s"$path/pq_codebook")
+    val rows = Tables.readParquet(s, s"$path/pq_codebook")
       .select(col("sub"), col("j"), col("cq"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
@@ -1936,9 +1936,9 @@ object Embeddings {
   // trained == loaded == served, hash-equal three ways.
   // ---------------------------------------------------------------------
   def serveAnnJoined(s: SparkSession, d: String, path: String): DataFrame = {
-    val cents = s.read.parquet(s"$path/ivf_centroids")
+    val cents = Tables.readParquet(s, s"$path/ivf_centroids")
       .select(col("cent_id"), col("cv"), col("cnrm2"))
-    val cb = s.read.parquet(s"$path/pq_codebook")
+    val cb = Tables.readParquet(s, s"$path/pq_codebook")
       .select(col("sub"), col("j"), col("cq"))
     val e = checked(s, d)
       .withColumn("nrm2", fdot(col("embedding"), col("embedding")))

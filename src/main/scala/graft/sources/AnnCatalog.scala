@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.functions.Hashing.fdot
 import graft.ops.Embeddings
 import graft.streaming.MergeSink
@@ -70,7 +71,7 @@ object AnnCatalog {
   private def pqSidecar(ixPath: String): String = ixPath + "/_ann_pq_codebook"
 
   private def centroids(spark: SparkSession, ixPath: String): DataFrame =
-    spark.read.parquet(sidecar(ixPath))
+    Tables.readParquet(spark, sidecar(ixPath))
       .select(col("cent_id"), col("cv"), col("cnrm2"))
 
   private def annOpts(
@@ -388,7 +389,7 @@ object AnnCatalog {
     val pqIx: Option[Embeddings.ServedPqIndex] =
       if (!isPq) None
       else Some(Embeddings.annPqServedPrep(pruned,
-        spark.read.parquet(pqSidecar(ixOpts("path")))
+        Tables.readParquet(spark, pqSidecar(ixOpts("path")))
           .select(col("sub"), col("j"), col("cq"))))
     def searchBatch(b: Int): DataFrame = {
       val bp = probe.filter(col("__batch") === b).drop("__batch")

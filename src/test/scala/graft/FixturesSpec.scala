@@ -203,4 +203,34 @@ class FixturesSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("mixes timestamp units"), e.getMessage)
   }
+
+  test("a path rewritten in another timestamp unit is decoded by its new footer") {
+    // The footer probe once cached per path for the JVM's life: after a
+    // rewrite it kept decoding by the OLD unit (NANOS files read natively
+    // fail, MICROS files taken for NANOS land 1000x off). Both directions.
+    val instants = Seq(
+      java.time.LocalDateTime.of(2024, 1, 15, 8, 30),
+      java.time.LocalDateTime.of(2024, 6, 30, 23, 59, 59))
+    val micros = instants.map { t =>
+      val i = t.toInstant(java.time.ZoneOffset.UTC)
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+    }
+    def write(path: String, unit: String): Unit =
+      ReadParquetSpec.writeFile(spark, path,
+        s"message orders { required int64 o_orderkey; " +
+          s"required int64 o_orderdate (TIMESTAMP($unit,false)); }",
+        micros.zipWithIndex.map { case (us, k) =>
+          Seq(k.toLong, if (unit == "NANOS") us * 1000L else us)
+        })
+    def dates(dir: String): Seq[java.time.LocalDateTime] =
+      Tables.orders(spark, dir).orderBy(col("o_orderkey")).collect()
+        .map(_.getAs[java.time.LocalDateTime]("o_orderdate")).toSeq
+    Seq("MICROS" -> "NANOS", "NANOS" -> "MICROS").foreach { case (from, to) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_rewrite_$from").toString
+      write(s"$dir/orders.parquet", from)
+      assert(dates(dir) == instants, s"$from file misdecoded")
+      write(s"$dir/orders.parquet", to)
+      assert(dates(dir) == instants, s"$from file rewritten as $to misdecoded")
+    }
+  }
 }

@@ -3,7 +3,7 @@
 
     python3 tools/ab.py PARENT CHANGE --workload olap_lanes --seed 9 --pairs 10
     python3 tools/ab.py --replay ab-olap.json   # re-print a saved --out file
-    python3 tools/ab.py --bench parent/bench_full.json change/bench_full.json
+    python3 tools/ab.py --bench target/bench_full-<parent>.json target/bench_full-<change>.json
 
 PARENT and CHANGE are git revisions of this repository; CHANGE may also be
 WORKTREE, the working tree's tracked and untracked (not ignored) files.
@@ -21,6 +21,13 @@ metrics of BENCHMARK.json, whether the change's median is worse than the
 parent's by more than the metric's bound ("unresolved" where either side's
 quartile distance is wider than the bound and the change does not beat the
 parent on every run). Every run's summary goes to --out as JSON.
+
+--bench compares two graft.Bench artifacts per query. Bench writes its
+artifact to target/bench_full-<sha12>.json, named by the short commit of the
+checkout it ran in, with -dirty appended when the tree has uncommitted or
+untracked files (target/bench_full.json outside a git checkout;
+SPARK_GRAFT_BENCH_OUT overrides), so runs of two commits sit side by side and
+a run of an uncommitted change never takes its parent's name.
 """
 import argparse
 import io
@@ -174,7 +181,7 @@ def show(res):
 
 
 def bench_diff(parent_path, change_path):
-    """Per-query seconds of two graft.Bench artifacts (target/bench_full.json)."""
+    """Per-query seconds of two graft.Bench artifacts (target/bench_full-<sha12>.json)."""
     p, c = (json.loads(Path(x).read_text()) for x in (parent_path, change_path))
     for side, art in (("parent", p), ("change", c)):
         print(f"{side}: {art['sf']}, total {art['value']} s, {art['run_conditions']}")
